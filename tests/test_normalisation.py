@@ -20,6 +20,7 @@ from webarchive_discovery_spark.functions.surt import (
     extract_public_suffix,
     extract_private_suffix,
     host_surts,
+    surt_key_from_canonical,
     to_surt,
 )
 
@@ -192,6 +193,18 @@ def test_host_surts():
     assert to_surt("web.archive.org") == "(org,archive,web,"
     assert all_levels("bbc.co.uk") == ["uk", "co.uk", "bbc.co.uk"]
     assert all_levels("192.168.0.1") == []
+
+
+# urlsplit drops \t \r \n anywhere in the URL; the fast path must agree,
+# since url_key is the fetch scheduler's tie-break key
+@pytest.mark.parametrize("canon,expected", [
+    ("http://example.org/a\tb", "(org,example,)/ab"),
+    ("http://example.org/p?q=a\r1", "(org,example,)/p?q=a1"),
+    ("http://exa\nmple.org/x", "(org,example,)/x"),
+    ("http://example.org:8\t0/a", "(org,example,)/a"),
+])
+def test_surt_key_strips_tab_and_newlines(canon, expected):
+    assert surt_key_from_canonical(canon) == expected
 
 
 # LinkExtractor public/private suffix incl. .uk special cases

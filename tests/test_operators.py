@@ -2,6 +2,7 @@
 determinism across partitionings, total-order sort property, salted
 repartition, CDX junk filter, regex extraction counts, URL length cap."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from webarchive_discovery_spark.operators.cdx import cdx_junk_filter, total_order_sort
@@ -818,6 +819,51 @@ def test_robots_match_rfc9309_wildcards(spark):
         "/aab/c": True,
         "/other": True,
     }
+
+
+@pytest.mark.parametrize("budget", ["int", "column"])
+def test_schedule_fetches_policy(spark, budget):
+    """The shared fetch scheduler (crawl loop, frontier_fetch_order gate,
+    profiling script): fetch_seq is 1..n over the fetched rows, a denied
+    row never takes a politeness slot, fetched ⇔ allowed ∧ slot ≤ budget,
+    a per-row Column budget works, and the output does not depend on the
+    number of range partitions."""
+    from webarchive_discovery_spark.operators.frontier import schedule_fetches
+
+    df = spark.createDataFrame(
+        [(f"k{i:03d}", f"h{i % 3}", (i * 7 % 10) / 5.0, i % 4 != 0, 100 * (i % 3 + 1))
+         for i in range(60)],
+        "url_key string, host string, priority double, robots_allowed boolean,"
+        " crawl_delay_ms int",
+    )
+    if budget == "int":
+        b, limit = 5, {"h0": 5, "h1": 5, "h2": 5}
+    else:  # a crawl-delay-derived budget: 1000 ms / delay
+        b = F.floor(F.lit(1000) / F.col("crawl_delay_ms"))
+        limit = {"h0": 10, "h1": 5, "h2": 3}
+    runs = [sorted(schedule_fetches(df, b, num_partitions=n).collect(),
+                   key=lambda r: r["url_key"]) for n in (1, 4)]
+    assert runs[0] == runs[1]
+    out = runs[0]
+
+    fetched = sorted((r for r in out if r["status"] == "fetched"),
+                     key=lambda r: r["fetch_seq"])
+    assert [r["fetch_seq"] for r in fetched] == list(range(1, len(fetched) + 1))
+    assert all(r["fetch_seq"] is None for r in out if r["status"] != "fetched")
+    # fetch order: band desc, slot asc, url_key asc
+    keys = [(-r["priority_band"], r["host_slot"], r["url_key"]) for r in fetched]
+    assert keys == sorted(keys)
+
+    for host in limit:
+        allowed_before = 0
+        for r in sorted((r for r in out if r["host"] == host),
+                        key=lambda r: (-r["priority"], r["url_key"])):
+            allowed_before += r["robots_allowed"]
+            assert r["host_slot"] == allowed_before  # denied rows add nothing
+            assert (r["status"] == "fetched") == (
+                r["robots_allowed"] and r["host_slot"] <= limit[host])
+            assert (r["status"] == "robots_denied") == (not r["robots_allowed"])
+    assert {r["status"] for r in out} == {"fetched", "delayed", "robots_denied"}
 
 
 def test_pagerank_properties(spark):

@@ -195,9 +195,8 @@ def test_frontier_dedup_window_fused_single_exchange(spark):
     """The epoch's dedup aggregate and per-host politeness window share ONE
     hash exchange on host (gate_queries._frontier_dedup): the explicit
     repartition(host) satisfies the ClusteredDistribution of both, so the
-    pre-sequence plan carries exactly one non-broadcast shuffle."""
-    from pyspark.sql import functions as F, Window
-
+    production pre-sequence step (frontier.politeness_status) carries
+    exactly one non-broadcast shuffle."""
     from webarchive_discovery_spark.operators import frontier
     from webarchive_discovery_spark.plans.gate_queries import (
         _frontier_dedup, _robots_rules_df)
@@ -208,12 +207,8 @@ def test_frontier_dedup_window_fused_single_exchange(spark):
     )
     fr = frontier.canonicalize_frontier(urls, "url")
     dd = _frontier_dedup(spark, SF, fr=fr)
-    rm = frontier.robots_match(dd, _robots_rules_df(spark), id_cols=["url_norm"])
-    w = (Window.partitionBy("host")
-         .orderBy(F.col("priority").desc(), F.col("url_key"))
-         .rowsBetween(Window.unboundedPreceding, 0))
-    out = rm.withColumn("priority", F.lit(1.0)).withColumn(
-        "slot", F.sum(F.when(F.col("robots_allowed"), 1).otherwise(0)).over(w))
+    rm = frontier.robots_match(dd, _robots_rules_df(spark))
+    out = frontier.politeness_status(rm)
     plan = out._jdf.queryExecution().executedPlan().toString()
     # the streamed (frontier) side prints before the BroadcastExchange
     # subtree; the tiny rules side may shuffle pre-broadcast — irrelevant

@@ -128,8 +128,10 @@ def surt_key_from_canonical(canon: str) -> str:
     # canonicalise itself.  Semantics replicated exactly: fragment dropped,
     # host lower-cased, port digits-only with 0..65535 range (out-of-range/
     # non-digit ports return ``canon`` like the except-branch below), :80
-    # elided, empty path → "/".  Anything else falls through to urlsplit.
-    if canon.startswith("http://"):
+    # elided, empty path → "/".  Anything else falls through to urlsplit,
+    # including URLs holding \t \r \n, which urlsplit strips everywhere.
+    if (canon.startswith("http://")
+            and "\t" not in canon and "\r" not in canon and "\n" not in canon):
         rest = canon[7:]
         end = len(rest)
         for sep in "/?#":

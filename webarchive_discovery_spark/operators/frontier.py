@@ -1,6 +1,8 @@
 """Crawl-frontier operators: canonicalization projection, URL-seen anti-join,
-robots prefix matching, priority scoring, politeness slotting, and the global
-deterministic fetch order.
+robots prefix matching, priority scoring, and the fetch scheduler — the one
+politeness-slot → status → priority-band → global-order policy that the crawl
+loop (``plans/crawl.py``), the ``frontier_fetch_order`` gate and the frontier
+profiling script all call.
 
 This is the north-star pipeline (BASELINE.json ``north_rule``): the Spark
 re-expression of the reference's crawl semantics —
@@ -12,6 +14,7 @@ re-expression of the reference's crawl semantics —
 - robots / exclusion prefix sets: ``WARCIndexer.java:888-908``,
   ``Annotator.java:217-225``, robots accounting ``HostsReportMapper.java:49-66``
 - priority inputs (inlink counts): ``OutlinkExtractorMapper.java:57-87``
+- per-host politeness accounting: ``HostsReportMapper.java:52-77``
 - total-order fetch scheduling: ``ArchiveCDXGenerator.java:208-215``
 - skew handling: salted keys replacing random reducer keys
   (``WARCIndexerMapper.java:222-230``)
@@ -34,8 +37,8 @@ __all__ = [
     "url_seen_anti_join",
     "robots_match",
     "priority_score",
-    "politeness_slots",
-    "fetch_order",
+    "politeness_status",
+    "schedule_fetches",
     "global_sequence",
     "salted_repartition",
     "parse_robots_txt",
@@ -143,7 +146,6 @@ def robots_match(
     robots_rules: DataFrame,
     host_col: str = "host",
     path_col: str = "url_path",
-    id_cols: list[str] | None = None,
 ) -> DataFrame:
     """Longest-prefix-match robots evaluation.
 
@@ -229,25 +231,74 @@ def priority_score(
     return base + links + aff
 
 
-def politeness_slots(
-    df: DataFrame,
-    host_col: str = "host",
-    priority_col: str = "priority",
-    key_col: str = "url_key",
-    budget_col: str | None = None,
-    default_budget: int = 100,
-) -> DataFrame:
-    """Per-host fetch slots: rank URLs within each host by (priority desc,
-    url_key); rows past the host's per-epoch budget are marked ``delayed``
-    (carried to the next epoch).  One shuffle keyed by host; AQE skew-join
-    plus upstream salting keep hot hosts from straggling."""
-    w = Window.partitionBy(host_col).orderBy(
-        F.col(priority_col).desc(), F.col(key_col)
+def politeness_status(df: DataFrame, budget: int | Column = 100,
+                      slot_key: str = "host") -> DataFrame:
+    """The lazy pre-sequence step of :func:`schedule_fetches`: per-slot-key
+    politeness slot, fetch status and priority band, with no action run.
+
+    ``df`` needs ``priority``, ``url_key``, ``robots_allowed`` (from
+    :func:`robots_match`) and the ``slot_key`` column (``host``, or a
+    registered-domain key for domain-scoped politeness).  Adds:
+
+    - ``host_slot``: running count of robots-ALLOWED rows within the slot
+      key, ordered (priority desc, url_key) — a denied row never takes a
+      slot (``HostsReportMapper.java:52-77`` counts robots-denied URLs
+      apart from the fetch budget);
+    - ``status``: ``robots_denied`` / ``delayed`` (slot past ``budget``,
+      carried to the next epoch) / ``fetched``.  ``budget`` is an int or a
+      per-row Column (e.g. the crawl's crawl-delay-tightened budget);
+    - ``priority_band``: ``least(3, floor(priority * 2))``.
+
+    One window keyed by the slot key: when the input is already hash-
+    partitioned on it (the fused dedup exchange), no shuffle is added."""
+    w = (
+        Window.partitionBy(slot_key)
+        .orderBy(F.col("priority").desc(), F.col("url_key"))
+        .rowsBetween(Window.unboundedPreceding, 0)
     )
-    budget = F.col(budget_col) if budget_col else F.lit(default_budget)
-    return df.withColumn("host_slot", F.row_number().over(w)).withColumn(
-        "within_budget", F.col("host_slot") <= budget
+    if not isinstance(budget, Column):
+        budget = F.lit(budget)
+    return (
+        df.withColumn(
+            "host_slot", F.sum(F.when(F.col("robots_allowed"), 1).otherwise(0)).over(w)
+        )
+        .withColumn(
+            "status",
+            F.when(~F.col("robots_allowed"), F.lit("robots_denied"))
+            .when(F.col("host_slot") > budget, F.lit("delayed"))
+            .otherwise(F.lit("fetched")),
+        )
+        .withColumn("priority_band", F.least(F.lit(3), F.floor(F.col("priority") * 2).cast("int")))
     )
+
+
+def schedule_fetches(df: DataFrame, budget: int | Column = 100, slot_key: str = "host",
+                     num_partitions: int | None = None) -> DataFrame:
+    """The fetch scheduler: :func:`politeness_status`, then one contiguous
+    :func:`global_sequence` over (fetched first, priority band desc, slot
+    asc, url_key asc) — banded so politeness interleaves hosts inside a band
+    instead of draining one host fully (the reference's total-order fetch
+    sequence, ``ArchiveCDXGenerator.java:208-215``).
+
+    Every row keeps its status; ``fetch_seq`` is 1..n over the fetched rows
+    and NULL elsewhere.  Single pass: no branch of the pipeline is unioned
+    or re-joined, so the upstream executes once."""
+    flagged = politeness_status(df, budget, slot_key).withColumn(
+        "_is_fetched", (F.col("status") == "fetched").cast("int")
+    )
+    return global_sequence(
+        flagged,
+        [
+            F.col("_is_fetched").desc(),
+            F.col("priority_band").desc(),
+            F.col("host_slot").asc(),
+            F.col("url_key").asc(),
+        ],
+        seq_col="_seq",
+        num_partitions=num_partitions,
+    ).withColumn(
+        "fetch_seq", F.when(F.col("status") == "fetched", F.col("_seq")).cast("long")
+    ).drop("_seq", "_is_fetched")
 
 
 def global_sequence(
@@ -450,30 +501,6 @@ def salted_repartition(df: DataFrame, key_col: str, salt_buckets: int = 16,
     if num_partitions:
         return out.repartition(num_partitions, F.col(key_col), F.col("_salt")).drop("_salt")
     return out.repartition(F.col(key_col), F.col("_salt")).drop("_salt")
-
-
-def fetch_order(
-    df: DataFrame,
-    priority_col: str = "priority",
-    key_col: str = "url_key",
-    bands: int = 4,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Deterministic global fetch order: (priority band desc, host slot,
-    url_key) — banded so politeness interleaves hosts inside a band instead
-    of draining one host fully; realized with the scalable global_sequence."""
-    banded = df.withColumn(
-        "priority_band",
-        F.least(
-            F.lit(bands - 1),
-            F.floor(F.col(priority_col) * bands / 2.0).cast("int"),
-        ),
-    )
-    return global_sequence(
-        banded,
-        [F.col("priority_band").desc(), F.col("host_slot").asc(), F.col(key_col).asc()],
-        num_partitions=num_partitions,
-    )
 
 
 def parse_robots_txt(

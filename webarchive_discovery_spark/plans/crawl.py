@@ -21,7 +21,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
@@ -189,6 +189,32 @@ def _fetch_simulate(records: DataFrame, passthrough: list[str] = ("image_id",)) 
     return records.select(*cols).mapInPandas(run, out_schema)
 
 
+# The crawl log's columns, in order.  A branch that lacks one of the typed
+# columns (a dup row has no priority, only a fetched row has a digest) fills
+# it with a NULL of that type.
+_LOG_COLUMNS = (
+    "url_norm", "url_key", "host", "hops", "retries", "inlinks",
+    "priority", "priority_band", "host_slot", "crawl_delay_ms",
+    "fetch_seq", "url_hash", "image_id", "digest", "caption", "status",
+)
+_LOG_NULL_TYPES = {
+    "priority": "double", "priority_band": "int", "host_slot": "long",
+    "crawl_delay_ms": "int", "fetch_seq": "long", "image_id": "string",
+    "digest": "string", "caption": "string",
+}
+
+
+def _log_select(df: DataFrame, status: Column | None = None) -> DataFrame:
+    """Project ``df`` onto the crawl-log columns; ``status``, when given,
+    replaces ``df``'s own status column when given."""
+    return df.select(*[
+        status.alias(c) if c == "status" and status is not None
+        else F.col(c) if c in df.columns
+        else F.lit(None).cast(_LOG_NULL_TYPES[c]).alias(c)
+        for c in _LOG_COLUMNS
+    ])
+
+
 def _epoch_plan(
     spark: SparkSession,
     raw_frontier: DataFrame,  # (url, hops)
@@ -262,47 +288,17 @@ def _epoch_plan(
         slot_key = "_pol_key"
     elif cfg.politeness_key != "host":
         raise ValueError(f"politeness_key must be host|domain, got {cfg.politeness_key!r}")
-    w = (
-        Window.partitionBy(slot_key)
-        .orderBy(F.col("priority").desc(), F.col("url_key"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    slotted = pri.withColumn(
-        "host_slot", F.sum(F.when(F.col("robots_allowed"), 1).otherwise(0)).over(w)
-    )
     # per-host budget: fixed cap, tightened by the robots crawl-delay when a
     # simulated epoch duration is set (a host serving one URL per 400 ms
     # yields fewer fetches per epoch than a 100 ms host)
-    budget = F.lit(cfg.host_budget)
+    budget = cfg.host_budget
     if cfg.epoch_duration_ms is not None:
         budget = F.least(
-            budget,
+            F.lit(budget),
             F.floor(F.lit(cfg.epoch_duration_ms)
                     / F.greatest(F.col("crawl_delay_ms"), F.lit(1))),
         )
-    flagged = (
-        slotted.withColumn(
-            "status",
-            F.when(~F.col("robots_allowed"), F.lit("robots_denied"))
-            .when(F.col("host_slot") > budget, F.lit("delayed"))
-            .otherwise(F.lit("fetched")),
-        )
-        .withColumn("priority_band", F.least(F.lit(3), F.floor(F.col("priority") * 2).cast("int")))
-        .withColumn("_is_fetched", (F.col("status") == "fetched").cast("int"))
-    )
-    ordered = fop.global_sequence(
-        flagged,
-        [
-            F.col("_is_fetched").desc(),
-            F.col("priority_band").desc(),
-            F.col("host_slot").asc(),
-            F.col("url_key").asc(),
-        ],
-        seq_col="_seq",
-        num_partitions=cfg.num_partitions,
-    ).withColumn(
-        "fetch_seq", F.when(F.col("status") == "fetched", F.col("_seq")).cast("long")
-    ).drop("_seq", "_is_fetched")
+    ordered = fop.schedule_fetches(pri, budget, slot_key, cfg.num_partitions)
 
     # fetch simulation: URL → record join (image id parsed from the path),
     # decode + validate via the Arrow batch kernel
@@ -314,46 +310,15 @@ def _epoch_plan(
     # one pass: the kernel carries the crawl-log columns through, so the
     # upstream join executes exactly once (no self re-join on image_id)
     fetched = _fetch_simulate(
-        joined,
-        passthrough=[
-            "url_norm", "url_key", "host", "hops", "retries", "inlinks",
-            "priority", "priority_band", "host_slot", "crawl_delay_ms",
-            "fetch_seq", "url_hash", "image_id", "caption",
-        ],
+        joined, passthrough=[c for c in _LOG_COLUMNS if c not in ("digest", "status")]
     )
-    fetch_log = fetched.select(
-        "url_norm", "url_key", "host", "hops", "retries", "inlinks",
-        "priority", "priority_band", "host_slot", "crawl_delay_ms",
-        "fetch_seq", "url_hash", "image_id", "digest", "caption",
+    fetch_log = _log_select(
+        fetched,
         F.when(F.col("fetch_ok") == True, F.lit("fetched"))  # noqa: E712
-        .otherwise(F.lit("fetch_error"))
-        .alias("status"),
+        .otherwise(F.lit("fetch_error")),
     )
-    other_log = (
-        ordered.filter(F.col("status") != "fetched")
-        .select(
-            "url_norm", "url_key", "host", "hops", "retries", "inlinks",
-            "priority", "priority_band", "host_slot", "crawl_delay_ms",
-            "fetch_seq", "url_hash",
-            F.lit(None).cast("string").alias("image_id"),
-            F.lit(None).cast("string").alias("digest"),
-            F.lit(None).cast("string").alias("caption"),
-            "status",
-        )
-    )
-    dup_log = dup.select(
-        "url_norm", "url_key", "host", "hops", "retries", "inlinks",
-        F.lit(None).cast("double").alias("priority"),
-        F.lit(None).cast("int").alias("priority_band"),
-        F.lit(None).cast("long").alias("host_slot"),
-        F.lit(None).cast("int").alias("crawl_delay_ms"),
-        F.lit(None).cast("long").alias("fetch_seq"),
-        "url_hash",
-        F.lit(None).cast("string").alias("image_id"),
-        F.lit(None).cast("string").alias("digest"),
-        F.lit(None).cast("string").alias("caption"),
-        F.lit("dup_seen").alias("status"),
-    )
+    other_log = _log_select(ordered.filter(F.col("status") != "fetched"))
+    dup_log = _log_select(dup, F.lit("dup_seen"))
     crawl_log = fetch_log.unionByName(other_log).unionByName(dup_log)
     return crawl_log, fetch_log.filter(F.col("status") == "fetched")
 
@@ -483,7 +448,12 @@ def run_crawl(
     metrics = []
     for epoch in range(start_epoch, cfg.epochs):
         bloom_probe = None
-        if cfg.use_bloom and cfg.seen_filter == "cuckoo":
+        if cfg.use_bloom and not seen.take(1):
+            # nothing seen yet: every candidate is definitely new — skip
+            # the filter tiers (no Python stage at all)
+            def bloom_probe(df):
+                return df.withColumn("maybe_seen", F.lit(False))
+        elif cfg.use_bloom and cfg.seen_filter == "cuckoo":
             # cuckoo tier: same prefilter contract (negative ⇒ definitely
             # new), deletion-capable and ~17% smaller at FPR 1e-6 — the
             # "counting-Bloom/cuckoo hybrid" realized in the loop.  Rebuilt
@@ -497,14 +467,10 @@ def run_crawl(
             )
 
             cparams = CuckooParams(cfg.bloom_capacity, cfg.bloom_fpr, cfg.bloom_shards)
-            if not seen.take(1):
-                def bloom_probe(df):
-                    return df.withColumn("maybe_seen", F.lit(False))
-            else:
-                cshards = build_cuckoo_shards(seen, "url_hash", cparams).localCheckpoint()
+            cshards = build_cuckoo_shards(seen, "url_hash", cparams).localCheckpoint()
 
-                def bloom_probe(df, _shards=cshards, _p=cparams):
-                    return cuckoo_negative_filter_sharded(df, "url_hash", _shards, _p)
+            def bloom_probe(df, _shards=cshards, _p=cparams):
+                return cuckoo_negative_filter_sharded(df, "url_hash", _shards, _p)
         elif cfg.use_bloom:
             params = BloomParams(cfg.bloom_capacity, cfg.bloom_fpr, cfg.bloom_shards)
             matrix_bytes = params.m_bits_per_shard * params.num_shards // 8
@@ -513,12 +479,7 @@ def run_crawl(
                 if cfg.bloom_sharded is not None
                 else matrix_bytes > cfg.bloom_driver_matrix_max_bytes
             )
-            if not seen.take(1):
-                # nothing seen yet: every candidate is definitely new — skip
-                # both tiers (no Python stage at all)
-                def bloom_probe(df):
-                    return df.withColumn("maybe_seen", F.lit(False))
-            elif sharded:
+            if sharded:
                 # 1e10 design point: one shuffle on shard id builds each
                 # shard's bit array in isolation; the cogroup probe holds
                 # exactly ONE shard per task — the full matrix never exists

@@ -1066,7 +1066,7 @@ def _robots_rules_df(spark):
     )
 
 
-def _frontier_dedup(spark, sf_dir, fr=None):
+def _frontier_dedup(spark=None, sf_dir=None, fr=None):
     """Dedup fused into the politeness shuffle: ``host`` is derived from
     ``url_norm``, so grouping by ``(host, url_norm)`` after an explicit
     ``repartition(host)`` is the same dedup — and hash(host) satisfies the
@@ -1130,7 +1130,7 @@ def url_seen_antijoin(spark, sf_dir):
 )
 def politeness_budget(spark, sf_dir):
     dd = _frontier_dedup(spark, sf_dir)
-    rm = frontier.robots_match(dd, _robots_rules_df(spark), id_cols=["url_norm"])
+    rm = frontier.robots_match(dd, _robots_rules_df(spark))
     return rm.groupBy("host", "hostn").agg(
         (F.lit(100) * (F.col("hostn") % 4 + 1)).cast("int").alias("crawl_delay_ms"),
         F.count(F.lit(1)).alias("n_urls"),
@@ -1170,52 +1170,23 @@ def politeness_budget(spark, sf_dir):
 )
 def frontier_fetch_order(spark, sf_dir):
     """Flagship: one full frontier epoch — canonicalize → dedup → robots →
-    politeness slots → banded deterministic global fetch order.
+    the shared fetch scheduler (``frontier.schedule_fetches``: politeness
+    slot, status, priority band, banded global fetch order).
 
-    Single-pass plan: robots status, politeness slot (a conditional running
-    count over the per-host window, so denied rows never consume slots), and
-    the priority band are all computed without branching the pipeline; the
-    global sequence is assigned once with fetched rows ordered first, so no
-    union/join re-executes the upstream (one UDF pass, two shuffles total:
-    the fused host-partitioned dedup+politeness exchange — see
-    ``_frontier_dedup`` — and the global-order range partition)."""
+    One UDF pass and two shuffles: the fused host-partitioned dedup +
+    politeness exchange (see ``_frontier_dedup``) and the global-order range
+    partition.  The select masks ``host_slot`` on denied rows and
+    ``priority_band`` on unfetched rows, as the oracle reports them."""
     dd = _frontier_dedup(spark, sf_dir)
-    rm = frontier.robots_match(dd, _robots_rules_df(spark), id_cols=["url_norm"])
-
-    w = (
-        Window.partitionBy("host")
-        .orderBy(F.col("priority").desc(), F.col("url_key"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    slotted = rm.withColumn(
-        "_slot", F.sum(F.when(F.col("robots_allowed"), 1).otherwise(0)).over(w)
-    )
-    flagged = slotted.withColumn(
-        "status",
-        F.when(~F.col("robots_allowed"), F.lit("robots_denied"))
-        .when(F.col("_slot") > 100, F.lit("delayed"))
-        .otherwise(F.lit("fetched")),
-    ).withColumn(
-        "_band", F.least(F.lit(3), F.floor(F.col("priority") * 2).cast("int"))
-    ).withColumn("_is_fetched", (F.col("status") == "fetched").cast("int"))
-
-    ordered = frontier.global_sequence(
-        flagged,
-        [
-            F.col("_is_fetched").desc(),
-            F.col("_band").desc(),
-            F.col("_slot").asc(),
-            F.col("url_key").asc(),
-        ],
-        seq_col="_seq",
-    )
+    rm = frontier.robots_match(dd, _robots_rules_df(spark))
+    ordered = frontier.schedule_fetches(rm, budget=100)
     return ordered.select(
         "url_key",
         "host",
         "status",
-        F.when(F.col("status") == "fetched", F.col("_seq")).cast("long").alias("fetch_seq"),
-        F.when(F.col("robots_allowed"), F.col("_slot")).cast("long").alias("host_slot"),
-        F.when(F.col("status") == "fetched", F.col("_band")).cast("int").alias("priority_band"),
+        "fetch_seq",
+        F.when(F.col("robots_allowed"), F.col("host_slot")).cast("long").alias("host_slot"),
+        F.when(F.col("status") == "fetched", F.col("priority_band")).cast("int").alias("priority_band"),
         F.round(F.col("priority"), 6).alias("priority"),
     )
 
