@@ -93,71 +93,48 @@ def test_sharded_build_matches_broadcast(spark):
     assert all(b[i] for i in range(1500, 2000))
 
 
-def test_sharded_probe_empty_shard_is_unseen(spark):
-    from webarchive_discovery_spark.operators.bloom import (
-        BloomParams,
-        bloom_negative_filter_sharded,
-        build_bloom_shards,
-    )
+@pytest.mark.parametrize("family", ["bloom", "cuckoo"])
+def test_sharded_probe_empty_shard_is_unseen(spark, family):
+    """The shared cogroup probe's empty-shard rules, for both filter
+    families: with no shard built at all every row is definitely unseen;
+    with some shards missing, rows routed to a missing shard are unseen
+    while members of a built shard stay maybe_seen."""
+    from webarchive_discovery_spark.operators import bloom as B
+    from webarchive_discovery_spark.operators import cuckoo as C
 
-    params = BloomParams(n_capacity=100, fpr=1e-3, num_shards=4)
-    seen = spark.createDataFrame([(4,)], "url_hash long")  # only shard 0 populated
-    shards = build_bloom_shards(seen, "url_hash", params)
-    probe = spark.createDataFrame([(5,), (4,)], "url_hash long")  # shards 1 and 0
-    got = {r["url_hash"]: r["maybe_seen"] for r in
-           bloom_negative_filter_sharded(probe, "url_hash", shards, params).collect()}
-    assert got[4] is True and got[5] is False
+    if family == "bloom":
+        params = B.BloomParams(n_capacity=100, fpr=1e-3, num_shards=4)
+        build, probe = B.build_bloom_shards, B.bloom_negative_filter_sharded
+    else:
+        params = C.CuckooParams(n_capacity=1_000, fpr=1e-3, num_shards=4)
+        build, probe = C.build_cuckoo_shards, C.cuckoo_negative_filter_sharded
 
+    def run(seen_hashes, probe_hashes):
+        seen = spark.createDataFrame([(h,) for h in seen_hashes], "url_hash long")
+        shards = build(seen, "url_hash", params)
+        rows = spark.createDataFrame([(h,) for h in probe_hashes], "url_hash long")
+        return {r["url_hash"]: r["maybe_seen"] for r in
+                probe(rows, "url_hash", shards, params).collect()}
 
-def test_counting_bloom_remove_and_export():
-    """CountingBloom (deletion tier of the north-rule's counting/cuckoo
-    hybrid): removed members become negative again, kept members NEVER do
-    (no false negatives — the prefilter contract); to_bloom() exports
-    bit-identical membership to a fresh bit-Bloom build."""
-    import numpy as np
-
-    from webarchive_discovery_spark.operators.bloom import (
-        BloomParams, CountingBloom, PartitionedBloom,
-    )
-
-    p = BloomParams(n_capacity=5000, fpr=1e-4, num_shards=4)
-    cb = CountingBloom(p)
-    rng = np.random.default_rng(7)
-    a = rng.integers(-2**62, 2**62, 3000, dtype=np.int64)
-    fresh = rng.integers(-2**62, 2**62, 3000, dtype=np.int64)
-    cb.add_hashes(a)
-    assert cb.contains_hashes(a).all()
-    cb.remove_hashes(a[:1500])
-    assert cb.contains_hashes(a[1500:]).all()  # no false negatives, ever
-    assert cb.contains_hashes(a[:1500]).mean() < 0.01  # removal works
-    assert cb.contains_hashes(fresh).mean() < 0.01     # FPR holds
-
-    bm = cb.to_bloom()
-    assert (bm.contains_hashes(a[1500:]) == cb.contains_hashes(a[1500:])).all()
-    assert (bm.contains_hashes(fresh) == cb.contains_hashes(fresh)).all()
-
-    # no-removal parity: counting build exports the exact bit Bloom
-    pb = PartitionedBloom(p)
-    pb.add_hashes(a)
-    cb2 = CountingBloom(p)
-    cb2.add_hashes(a)
-    assert (cb2.to_bloom().bits == pb.bits).all()
+    assert run([], range(100)) == {h: False for h in range(100)}
+    # only shard 0 is built; 5, 6 and 7 route to the missing shards 1-3
+    assert run([4], [4, 5, 6, 7]) == {4: True, 5: False, 6: False, 7: False}
 
 
-def test_counting_bloom_saturation_safety():
-    """A saturated cell is never incremented or decremented again —
-    removing through a saturated cell must not create false negatives."""
-    import numpy as np
+def test_shard_scaffold_declares_eval_type(spark):
+    """The shared shard build declares full type hints, so Spark infers the
+    grouped-map eval type without a UserWarning on every build."""
+    import warnings
 
-    from webarchive_discovery_spark.operators.bloom import BloomParams, CountingBloom
+    from webarchive_discovery_spark.operators import bloom as B
+    from webarchive_discovery_spark.operators import cuckoo as C
 
-    p = BloomParams(n_capacity=64, fpr=1e-3, num_shards=2)
-    cb = CountingBloom(p)
-    dup = np.repeat(np.int64(12345), 1000)
-    for _ in range(3):
-        cb.add_hashes(dup)
-    assert cb.counts.max() == 255
-    cb.remove_hashes(dup)
-    assert cb.contains_hashes(np.array([12345], dtype=np.int64)).all()
-    merged = cb.merge(cb)  # saturating elementwise sum
-    assert merged.counts.max() == 255
+    hashes = spark.range(10).selectExpr("id as url_hash")
+    bp = B.BloomParams(n_capacity=100, fpr=1e-3, num_shards=4)
+    cp = C.CuckooParams(n_capacity=100, fpr=1e-3, num_shards=4)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        shards = B.build_bloom_shards(hashes, "url_hash", bp)
+        B.bloom_negative_filter_sharded(hashes, "url_hash", shards, bp)
+        shards = C.build_cuckoo_shards(hashes, "url_hash", cp)
+        C.cuckoo_negative_filter_sharded(hashes, "url_hash", shards, cp)

@@ -185,7 +185,7 @@ def test_sharded_bloom_tier_at_design_capacity(spark, world, monkeypatch):
     the fully-distributed sharded build/probe: the driver-merge tier
     (``build_bloom``, which treeReduces the whole bit matrix to the driver)
     is monkeypatched to fail, capacity is the 1e10 design point (full matrix
-    ≈ 36 GB — far past ``bloom_driver_matrix_max_bytes``), and the crawl
+    ≈ 36 GB — far past the 4 GiB broadcast limit), and the crawl
     output must equal the exact-only (no-Bloom) run bit-for-bit, proving the
     Bloom stays a pure prefilter on this tier too."""
     import webarchive_discovery_spark.plans.crawl as crawl_mod
@@ -218,7 +218,7 @@ def test_sharded_bloom_tier_at_design_capacity(spark, world, monkeypatch):
 
 def test_recrawl_expiry_refetches(spark, world):
     """recrawl_epochs: a URL whose seen-set entry expires is refetched when
-    rediscovered (the deletion the counting-Bloom tier models; exact side
+    rediscovered (membership is derived from the fetch history; exact side
     authoritative), and within the window it is still dup_seen."""
     records, seeds, links, robots = world
     cfg = CrawlConfig(
@@ -516,6 +516,15 @@ def test_cuckoo_seen_filter_tier(spark, world):
     assert key(bloom) == key(cuckoo)
     # later epochs actually exercised the filter: dup_seen rows exist
     assert cuckoo["crawl_log"].filter(F.col("status") == "dup_seen").count() > 0
+
+
+def test_seen_filter_rejects_unknown_family(spark, world):
+    """A misspelt ``seen_filter`` raises instead of silently running the
+    Bloom tier."""
+    records, seeds, links, robots = world
+    cfg = CrawlConfig(epochs=1, host_budget=50, num_partitions=4, seen_filter="Cuckoo")
+    with pytest.raises(ValueError, match="seen_filter"):
+        run_crawl(spark, records, seeds, links, robots, cfg)
 
 
 def test_retry_counter_survives_link_rediscovery(spark, world):

@@ -103,15 +103,6 @@ def test_sharded_build_probe_exact_unseen(spark):
     assert got == want
 
 
-def test_sharded_probe_empty_shard_is_unseen(spark):
-    p = C.CuckooParams(n_capacity=1_000, fpr=1e-3, num_shards=4)
-    seen = spark.range(0).select(F.col("id").alias("url_hash"))
-    shards = C.build_cuckoo_shards(seen, "url_hash", p)
-    rows = spark.range(100).select(F.col("id").alias("url_hash"))
-    probed = C.cuckoo_negative_filter_sharded(rows, "url_hash", shards, p)
-    assert probed.filter(F.col("maybe_seen")).count() == 0
-
-
 def test_fpr_holds_within_a_shard():
     """Sharding selects on hash mod num_shards (low bits).  Within one
     shard every raw hash shares those low bits, so a fingerprint taken from

@@ -8,26 +8,35 @@ an anti-join — so correctness never depends on the FPR, only shuffle volume
 does.  This generalizes the reference's dedup-by-digest URL-seen semantics
 (``MDXReduplicatingReducer.java:72-152``, ``PersistLogMapper.java:117-143``).
 
-Sharding: shard id = ``url_hash mod num_shards``; each shard is a numpy bit
-array built per Spark partition with ``applyInPandas`` partial builds that
-are OR-merged driver-side (a few KB–MB each), then broadcast.  At the 1e10
-design point with FPR 1e-6 the total is m = n·ln(1e-6)/ln(2)² ≈ 28.8 bits/URL
-→ ~36 GB split over ~1024 shards of ~35 MB — each executor holds only the
-shards it probes, and k = 20 probes stay in one or two cache lines per URL
-because we derive all k indexes from one 64-bit hash (Kirsch–Mitzenmacher
-double hashing).
+Two tiers.  Broadcast (``build_bloom`` / ``bloom_negative_filter``): each
+Spark partition builds a partial bit matrix, the partials are OR-merged on
+the driver and broadcast — right while the whole matrix fits in memory.
+Sharded (``build_bloom_shards`` / ``bloom_negative_filter_sharded``): shard
+id = ``url_hash mod num_shards``, one task builds one shard's bit array and
+the probe cogroups rows with their shard, so the full matrix never exists in
+one process.  The sharded scaffold (``build_shards`` / ``probe_shards``) is
+shared with the cuckoo filter (``operators.cuckoo``); each family supplies
+only its per-shard build and probe kernels.  Deletion (recrawl expiry) is
+the cuckoo filter's job (``CuckooFilter.remove_hashes``).
+
+At the 1e10 design point with FPR 1e-6 the total is m = n·ln(1e-6)/ln(2)² ≈
+28.8 bits/URL → ~36 GB split over ~1024 shards of ~35 MB — each executor
+holds only the shards it probes, and k = 20 probes stay in one or two cache
+lines per URL because we derive all k indexes from one 64-bit hash
+(Kirsch–Mitzenmacher double hashing).
 """
 
 from __future__ import annotations
 
 import math
 from dataclasses import dataclass
+from typing import Callable
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, GroupedData
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
+from pyspark.sql.types import BooleanType, StructField, StructType
 
 __all__ = [
     "BloomParams",
@@ -36,7 +45,8 @@ __all__ = [
     "bloom_negative_filter",
     "build_bloom_shards",
     "bloom_negative_filter_sharded",
-    "CountingBloom",
+    "build_shards",
+    "probe_shards",
 ]
 
 
@@ -160,178 +170,113 @@ def _shard_probe_masks(hashes: np.ndarray, params: BloomParams):
     return idx >> 6, np.uint64(1) << (idx & 63).astype(np.uint64)
 
 
+def _shard_of(hash_col: str, num_shards: int) -> Column:
+    """The shard key.  Signed ``pmod`` picks the same shard as the unsigned
+    in-memory mod because ``num_shards`` is a power of two."""
+    return F.pmod(F.col(hash_col), F.lit(num_shards)).cast("int")
+
+
+def _grouped_by_shard(df: DataFrame, shard_col: str, num_shards: int) -> GroupedData:
+    """Group on ``shard_col`` behind an explicit repartition into
+    ``min(num_shards, defaultParallelism)`` partitions.  The shuffled bytes
+    are tiny (8 B per hash) but each group runs a real per-shard kernel:
+    AQE would coalesce the exchange by byte size and serialize every shard
+    onto one task.  A user repartition is never coalesced, and the groupBy
+    reuses its exchange."""
+    n_parts = min(num_shards, df.sparkSession.sparkContext.defaultParallelism)
+    return df.repartition(n_parts, shard_col).groupBy(shard_col)
+
+
+def build_shards(
+    df: DataFrame,
+    hash_col: str,
+    num_shards: int,
+    kernel: Callable[[int, np.ndarray], bytes],
+    out_col: str,
+) -> DataFrame:
+    """Shared shard build of the URL-seen prefilters: ONE shuffle on
+    ``shard_id = pmod(hash, num_shards)``, then each task runs
+    ``kernel(shard_id, int64 hashes) -> bytes`` over its whole shard in
+    isolation (no partial merge, no driver materialization).  Returns
+    ``(shard_id int, <out_col> binary)``; shards that received no hash have
+    no row."""
+
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        shard_id = int(key[0])
+        h = pdf[hash_col].to_numpy(dtype=np.int64, na_value=0)
+        return pd.DataFrame({"shard_id": [shard_id], out_col: [kernel(shard_id, h)]})
+
+    keyed = df.select(hash_col).withColumn("_shard", _shard_of(hash_col, num_shards))
+    return _grouped_by_shard(keyed, "_shard", num_shards).applyInPandas(
+        build, f"shard_id int, {out_col} binary"
+    )
+
+
+def probe_shards(
+    df: DataFrame,
+    hash_col: str,
+    shards: DataFrame,
+    num_shards: int,
+    kernel: Callable[[bytes, np.ndarray], np.ndarray],
+    in_col: str,
+) -> DataFrame:
+    """Shared cogrouped probe: rows meet their shard's bytes on
+    ``shard_id``, so each task holds exactly ONE shard plus its rows (never
+    a bytes-per-row join, never the full matrix).  Adds ``maybe_seen`` =
+    ``kernel(shard bytes, int64 hashes)``; ``false`` ⇒ definitely unseen.
+    Rows whose shard has no entry (nothing was ever added to it) are
+    definitely unseen."""
+    out_schema = StructType(df.schema.fields + [StructField("maybe_seen", BooleanType())])
+    cols = list(df.columns)
+
+    def probe(key: tuple, rows: pd.DataFrame, shard: pd.DataFrame) -> pd.DataFrame:
+        if rows.empty:
+            return pd.DataFrame(columns=cols + ["maybe_seen"])
+        h = rows[hash_col].to_numpy(dtype=np.int64, na_value=0)
+        rows = rows[cols].copy()
+        rows["maybe_seen"] = (
+            False if shard.empty else kernel(bytes(shard[in_col].iloc[0]), h)
+        )
+        return rows
+
+    left = _grouped_by_shard(
+        df.withColumn("_shard", _shard_of(hash_col, num_shards)), "_shard", num_shards
+    )
+    right = _grouped_by_shard(shards, "shard_id", num_shards)
+    return left.cogroup(right).applyInPandas(probe, out_schema)
+
+
 def build_bloom_shards(df: DataFrame, hash_col: str, params: BloomParams) -> DataFrame:
-    """Fully-distributed build at the 1e10 design point: ONE shuffle on
-    ``shard_id = hash mod num_shards``; each task builds its whole shard's
-    bit array in isolation (no partial-merge, no driver materialization).
-    Returns a DataFrame ``(shard_id int, bits binary)`` — the durable form
-    (write it to parquet next to the seen-set snapshot for resume).  Peak
-    per-task memory = one shard = ``m_bits_per_shard/8`` bytes (~35 MB at
-    the design point with 1024 shards)."""
+    """Fully-distributed Bloom build at the 1e10 design point (see
+    :func:`build_shards`).  Returns ``(shard_id int, bits binary)`` — the
+    durable form (write it to parquet next to the seen-set snapshot for
+    resume).  Peak per-task memory = one shard = ``m_bits_per_shard/8``
+    bytes (~35 MB at the design point with 1024 shards)."""
     words = params.m_bits_per_shard // 64
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(shard_id: int, h: np.ndarray) -> bytes:
         bits = np.zeros(words, dtype=np.uint64)
-        h = pdf[hash_col].to_numpy(dtype=np.int64, na_value=0)
         word, mask = _shard_probe_masks(h, params)
         for ki in range(params.k_hashes):
             np.bitwise_or.at(bits, word[ki], mask[ki])
-        return pd.DataFrame({"shard_id": [int(key[0])], "bits": [bits.tobytes()]})
+        return bits.tobytes()
 
-    # explicit shard-keyed repartition: the shuffled bytes are tiny (8 B/key)
-    # but each group runs a REAL per-shard build kernel — AQE would coalesce
-    # the exchange by byte size and serialize every shard onto one task
-    # (guide §2.5: exploding/compute-heavy groups; user repartitions are
-    # never coalesced, and the groupBy reuses this exchange)
-    return (
-        df.select(hash_col)
-        .withColumn("_shard", F.pmod(F.col(hash_col), F.lit(params.num_shards)).cast("int"))
-        .repartition(
-            min(params.num_shards, df.sparkSession.sparkContext.defaultParallelism),
-            "_shard",
-        )
-        .groupBy("_shard")
-        .applyInPandas(build, "shard_id int, bits binary")
-    )
+    return build_shards(df, hash_col, params.num_shards, kernel, "bits")
 
 
 def bloom_negative_filter_sharded(
     spark_df: DataFrame, hash_col: str, shards: DataFrame, params: BloomParams
 ) -> DataFrame:
-    """Sharded probe: cogroup rows with their shard's bit array on
-    ``shard_id`` — each task holds exactly ONE shard plus its rows (never a
-    bits-per-row join, never the full matrix).  Adds ``maybe_seen``;
-    ``false`` ⇒ definitely unseen.  Rows whose shard has no entry (nothing
-    ever added) are definitely unseen."""
-    from pyspark.sql.types import StructField, StructType
+    """Sharded Bloom probe over :func:`build_bloom_shards` output (see
+    :func:`probe_shards`).  Adds ``maybe_seen``; ``false`` ⇒ definitely
+    unseen."""
 
-    out_schema = StructType(spark_df.schema.fields + [StructField("maybe_seen", BooleanType())])
-    cols = list(spark_df.columns)
-
-    def probe(key, rows: pd.DataFrame, shard: pd.DataFrame) -> pd.DataFrame:
-        if rows.empty:
-            return pd.DataFrame(columns=cols + ["maybe_seen"])
-        if shard.empty:
-            rows = rows[cols].copy()
-            rows["maybe_seen"] = False
-            return rows
-        bits = np.frombuffer(bytes(shard["bits"].iloc[0]), dtype=np.uint64)
-        h = rows[hash_col].to_numpy(dtype=np.int64, na_value=0)
+    def kernel(shard: bytes, h: np.ndarray) -> np.ndarray:
+        bits = np.frombuffer(shard, dtype=np.uint64)
         word, mask = _shard_probe_masks(h, params)
         seen = np.ones(len(h), dtype=bool)
         for ki in range(params.k_hashes):
             seen &= (bits[word[ki]] & mask[ki]) != 0
-        rows = rows[cols].copy()
-        rows["maybe_seen"] = seen
-        return rows
+        return seen
 
-    # shard-keyed repartition ahead of the cogroup — same AQE-coalescing
-    # guard as the sharded build (the probe kernel is the compute, not the
-    # shuffled bytes)
-    n_parts = min(
-        params.num_shards, spark_df.sparkSession.sparkContext.defaultParallelism
-    )
-    left = spark_df.withColumn(
-        "_shard", F.pmod(F.col(hash_col), F.lit(params.num_shards)).cast("int")
-    ).repartition(n_parts, "_shard").groupBy("_shard")
-    right = shards.repartition(n_parts, "shard_id").groupBy("shard_id")
-    return left.cogroup(right).applyInPandas(probe, out_schema)
-
-
-class CountingBloom:
-    """Counting variant of :class:`PartitionedBloom` — supports REMOVAL, the
-    half of the north-rule's "counting-Bloom/cuckoo hybrid" a recrawl
-    pipeline needs: when a seen-set entry expires (content older than the
-    recrawl interval), its URL is removed so the frontier revisits it.
-
-    Same shard layout and Kirsch–Mitzenmacher probes as the bit Bloom;
-    cells are uint8 counters with SATURATION semantics: a cell that reaches
-    255 is never incremented or decremented again (the standard safe rule —
-    decrementing a saturated cell could drive it to zero while other members
-    still probe it, creating false negatives, which would break the
-    prefilter's "negative is definitive" contract).  Memory is 8× the bit
-    Bloom (one byte per bit-cell); pack to 4-bit counters for 4× if the
-    design point demands it.  ``to_bloom()`` exports the current membership
-    as a broadcastable bit Bloom for the probe side, so the counting tier
-    lives only where state is mutated (the seen-set maintainer), never on
-    the hot probe path."""
-
-    SATURATED = np.uint8(255)
-
-    def __init__(self, params: BloomParams, counts: np.ndarray | None = None):
-        self.params = params
-        self.counts = (
-            counts
-            if counts is not None
-            else np.zeros((params.num_shards, params.m_bits_per_shard), dtype=np.uint8)
-        )
-
-    def _cells(self, hashes: np.ndarray):
-        p = self.params
-        h = hashes.astype(np.uint64)
-        shard = (h % np.uint64(p.num_shards)).astype(np.int64)
-        idx = _probe_indexes(h, p.k_hashes, p.m_bits_per_shard)  # (k, n)
-        return shard, idx
-
-    def _unique_cells(self, shard: np.ndarray, idx_k: np.ndarray):
-        """(shard_idx, cell_idx, multiplicity) with duplicate cells in the
-        batch collapsed — saturation arithmetic needs exact per-cell deltas,
-        and ``np.add.at`` on raw uint8 would wrap past 255."""
-        m = self.params.m_bits_per_shard
-        lin = shard * np.int64(m) + idx_k
-        uniq, cnt = np.unique(lin, return_counts=True)
-        return uniq // m, uniq % m, cnt
-
-    def add_hashes(self, hashes: np.ndarray) -> None:
-        shard, idx = self._cells(hashes)
-        for ki in range(self.params.k_hashes):
-            us, ui, cnt = self._unique_cells(shard, idx[ki])
-            cur = self.counts[us, ui]
-            new = np.minimum(cur.astype(np.int64) + cnt, 255).astype(np.uint8)
-            new[cur == self.SATURATED] = self.SATURATED
-            self.counts[us, ui] = new
-
-    def remove_hashes(self, hashes: np.ndarray) -> None:
-        """Remove previously-added members.  Removing a hash that was never
-        added is UNDEFINED (as in every counting Bloom) — the seen-set
-        maintainer only feeds confirmed members here.  Saturated cells are
-        never decremented (their true count is unknown)."""
-        shard, idx = self._cells(hashes)
-        for ki in range(self.params.k_hashes):
-            us, ui, cnt = self._unique_cells(shard, idx[ki])
-            cur = self.counts[us, ui]
-            new = np.maximum(cur.astype(np.int64) - cnt, 0).astype(np.uint8)
-            keep = cur == self.SATURATED
-            new[keep] = self.SATURATED
-            self.counts[us, ui] = new
-
-    def contains_hashes(self, hashes: np.ndarray) -> np.ndarray:
-        shard, idx = self._cells(hashes)
-        out = np.ones(len(hashes), dtype=bool)
-        for ki in range(self.params.k_hashes):
-            out &= self.counts[shard, idx[ki]] > 0
-        return out
-
-    def to_bloom(self) -> PartitionedBloom:
-        """Export membership (count > 0) as the broadcastable bit Bloom."""
-        p = self.params
-        words = p.m_bits_per_shard // 64
-        bits = np.zeros((p.num_shards, words), dtype=np.uint64)
-        shard_i, cell_i = np.nonzero(self.counts)
-        # bitwise_or.at, NOT fancy |= — duplicate (shard, word) pairs would
-        # otherwise keep only the last bit per word
-        np.bitwise_or.at(
-            bits,
-            (shard_i, cell_i >> 6),
-            np.uint64(1) << (cell_i & 63).astype(np.uint64),
-        )
-        return PartitionedBloom(p, bits)
-
-    def merge(self, other: "CountingBloom") -> "CountingBloom":
-        """Saturating elementwise sum (partial builds from Spark partitions)."""
-        s = self.counts.astype(np.uint16) + other.counts.astype(np.uint16)
-        # a saturated input stays saturated (its true count is unknown)
-        sat = (self.counts == self.SATURATED) | (other.counts == self.SATURATED)
-        out = np.minimum(s, 255).astype(np.uint8)
-        out[sat] = self.SATURATED
-        return CountingBloom(self.params, out)
+    return probe_shards(spark_df, hash_col, shards, params.num_shards, kernel, "bits")

@@ -1,11 +1,11 @@
-"""Cuckoo filter: the second half of the north-rule's "counting-Bloom/cuckoo
-hybrid" URL-seen membership tier.
+"""Cuckoo filter: the deletion-capable URL-seen prefilter.
 
-Where the counting Bloom (``bloom.CountingBloom``) buys deletion by paying 8×
-the bit-Bloom's memory, the cuckoo filter (Fan et al., CoNEXT 2014,
-"Cuckoo Filter: Practically Better Than Bloom") buys deletion AND better
-space at low FPR: with bucket size b=4 and load factor α≈0.95 it stores
-``f/α`` bits per key where ``FPR ≈ 2b/2^f``, so at the design point
+The cuckoo filter (Fan et al., CoNEXT 2014, "Cuckoo Filter: Practically
+Better Than Bloom") supports deletion — recrawl expiry removes a URL so the
+frontier revisits it, the sliding-window case of "A Learned Cuckoo Filter
+for AMQ over Variable-sized Sliding Windows" (SIGMOD 2023) — and takes less
+space than the Bloom at low FPR: with bucket size b=4 and load factor α≈0.95
+it stores ``f/α`` bits per key where ``FPR ≈ 2b/2^f``, so at the design point
 (FPR ≤ 1e-6) f = 23 bits → ~24.2 bits/URL vs the Bloom's 28.8 — and a
 membership probe touches exactly TWO buckets (two cache lines) instead of
 k = 20 scattered bits.  Same role in the crawl loop as the Bloom tier: a
@@ -22,11 +22,12 @@ victims are chosen DETERMINISTICALLY ((kicks + fp) mod b) — no RNG in
 executors; the physical slot layout depends on insertion order but the
 MEMBERSHIP SET does not, which is the property the seen-set contract needs.
 
-Sharding mirrors ``bloom.build_bloom_shards``: shard id = ``hash mod
-num_shards``, one task builds one shard's whole table via
-``applyInPandas``, probes cogroup rows with their shard — the full matrix
-never exists in one place.  At 1e10 URLs / 1024 shards a shard's table is
-~30 MB (2^23 buckets × 4 × uint32).
+Sharding uses the scaffold shared with the Bloom (``bloom.build_shards`` /
+``bloom.probe_shards``): shard id = ``hash mod num_shards``, one task builds
+one shard's whole table, probes cogroup rows with their shard — the full
+matrix never exists in one place.  This module supplies only the per-shard
+kernels.  At 1e10 URLs / 1024 shards a shard's table is ~30 MB (2^23
+buckets × 4 × uint32).
 """
 
 from __future__ import annotations
@@ -35,9 +36,9 @@ import math
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from .bloom import build_shards, probe_shards
 
 __all__ = ["CuckooParams", "CuckooFilter", "build_cuckoo_shards",
            "cuckoo_negative_filter_sharded"]
@@ -131,34 +132,29 @@ class CuckooFilter:
         both), so the fast path preserves the seen-set contract exactly."""
         fp, i1 = self._fp_and_index(hashes)
         fp, i1 = self._bulk_two_choice(fp, i1)
+        return sum(not self._insert(np.uint32(f), int(i)) for f, i in zip(fp, i1))
+
+    def _insert(self, f: np.uint32, i: int) -> bool:
+        """Place fingerprint ``f`` in bucket ``i`` or its alternate, else
+        evict deterministically (victim slot ``(kicks + fp) mod b``) for up
+        to ``max_kicks`` rounds.  False when the last evicted fingerprint
+        found no slot — it is then lost."""
         table, b = self.table, self.params.bucket_size
-        dropped = 0
-        for j in range(len(fp)):
-            f, i = np.uint32(fp[j]), int(i1[j])
-            placed = False
-            for idx in (i, int(self._alt_index(i, f))):
-                row = table[idx]
-                empty = np.nonzero(row == 0)[0]
-                if empty.size:
-                    row[empty[0]] = f
-                    placed = True
-                    break
-            if placed:
-                continue
-            idx = i
-            for kicks in range(self.params.max_kicks):
-                victim_slot = (kicks + int(f)) % b
-                f, table[idx, victim_slot] = table[idx, victim_slot], f
-                idx = int(self._alt_index(idx, f))
-                row = table[idx]
-                empty = np.nonzero(row == 0)[0]
-                if empty.size:
-                    row[empty[0]] = f
-                    placed = True
-                    break
-            if not placed:
-                dropped += 1
-        return dropped
+        for idx in (i, int(self._alt_index(i, f))):
+            empty = np.nonzero(table[idx] == 0)[0]
+            if empty.size:
+                table[idx, empty[0]] = f
+                return True
+        idx = i
+        for kicks in range(self.params.max_kicks):
+            victim = (kicks + int(f)) % b
+            f, table[idx, victim] = table[idx, victim], f
+            idx = int(self._alt_index(idx, f))
+            empty = np.nonzero(table[idx] == 0)[0]
+            if empty.size:
+                table[idx, empty[0]] = f
+                return True
+        return False
 
     def _bulk_two_choice(self, fp: np.ndarray, i1: np.ndarray):
         """Vectorized first phase of bulk insert: place as many keys as fit
@@ -200,8 +196,8 @@ class CuckooFilter:
     def remove_hashes(self, hashes: np.ndarray) -> int:
         """Delete one fingerprint occurrence per key (either bucket).
         Removing a never-added key is UNDEFINED (it may delete another key's
-        colliding fingerprint) — same contract as the counting Bloom: only
-        confirmed members are fed here.  Returns how many were found."""
+        colliding fingerprint): only confirmed members are fed here.
+        Returns how many were found."""
         fp, i1 = self._fp_and_index(hashes)
         removed = 0
         for j in range(len(fp)):
@@ -222,31 +218,9 @@ class CuckooFilter:
         out = CuckooFilter(self.params, self.table.copy())
         bi, _ = np.nonzero(other.table)
         fps = other.table[other.table != 0]
-        table, b = out.table, out.params.bucket_size
-        for j in range(len(fps)):
-            f, i = np.uint32(fps[j]), int(bi[j])
-            placed = False
-            for idx in (i, int(out._alt_index(i, f))):
-                row = table[idx]
-                empty = np.nonzero(row == 0)[0]
-                if empty.size:
-                    row[empty[0]] = f
-                    placed = True
-                    break
-            if not placed:
-                idx = i
-                for kicks in range(out.params.max_kicks):
-                    victim = (kicks + int(f)) % b
-                    f, table[idx, victim] = table[idx, victim], f
-                    idx = int(out._alt_index(idx, f))
-                    row = table[idx]
-                    empty = np.nonzero(row == 0)[0]
-                    if empty.size:
-                        row[empty[0]] = f
-                        placed = True
-                        break
-                if not placed:
-                    raise ValueError("cuckoo merge overflow — resize before merging")
+        for f, i in zip(fps, bi):
+            if not out._insert(np.uint32(f), int(i)):
+                raise ValueError("cuckoo merge overflow — resize before merging")
         return out
 
     @property
@@ -255,80 +229,38 @@ class CuckooFilter:
 
 
 def build_cuckoo_shards(df: DataFrame, hash_col: str, params: CuckooParams) -> DataFrame:
-    """Fully-distributed build: ONE shuffle on ``shard_id = hash mod
-    num_shards``; each task builds its whole shard's table in isolation.
-    Returns ``(shard_id int, table binary)`` — durable (parquet next to the
-    seen-set snapshot), mergeable via :meth:`CuckooFilter.merge`.  Raises in
-    the task if any key is dropped (a drop would break the no-false-negative
-    contract) — size capacity generously; at α = 0.95 with b = 4 drops are
-    vanishingly rare below capacity."""
+    """Fully-distributed build (see :func:`bloom.build_shards`): each task
+    builds its whole shard's table in isolation.  Returns ``(shard_id int,
+    table binary)`` — durable (parquet next to the seen-set snapshot),
+    mergeable via :meth:`CuckooFilter.merge`.  Raises in the task if any key
+    is dropped (a drop would break the no-false-negative contract) — size
+    capacity generously; at α = 0.95 with b = 4 drops are vanishingly rare
+    below capacity."""
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(shard_id: int, h: np.ndarray) -> bytes:
         filt = CuckooFilter(params)
-        h = pdf[hash_col].to_numpy(dtype=np.int64, na_value=0)
         dropped = filt.add_hashes(h)
         if dropped:
             raise ValueError(
-                f"cuckoo shard {int(key[0])} overflow: {dropped} keys dropped "
+                f"cuckoo shard {shard_id} overflow: {dropped} keys dropped "
                 f"(load {filt.load:.3f}) — raise n_capacity"
             )
-        return pd.DataFrame(
-            {"shard_id": [int(key[0])], "table": [filt.table.tobytes()]}
-        )
+        return filt.table.tobytes()
 
-    # explicit shard-keyed repartition: the shuffled bytes are tiny (8 B/key)
-    # but each group runs a REAL per-shard build kernel — AQE would coalesce
-    # the exchange by byte size and serialize every shard onto one task
-    # (guide §2.5: exploding/compute-heavy groups; user repartitions are
-    # never coalesced, and the groupBy reuses this exchange)
-    return (
-        df.select(hash_col)
-        .withColumn("_shard", F.pmod(F.col(hash_col), F.lit(params.num_shards)).cast("int"))
-        .repartition(
-            min(params.num_shards, df.sparkSession.sparkContext.defaultParallelism),
-            "_shard",
-        )
-        .groupBy("_shard")
-        .applyInPandas(build, "shard_id int, table binary")
-    )
+    return build_shards(df, hash_col, params.num_shards, kernel, "table")
 
 
 def cuckoo_negative_filter_sharded(
     spark_df: DataFrame, hash_col: str, shards: DataFrame, params: CuckooParams
 ) -> DataFrame:
-    """Cogrouped probe, mirroring ``bloom_negative_filter_sharded``: each
-    task holds exactly one shard's table plus its rows.  Adds ``maybe_seen``
-    boolean; ``false`` ⇒ definitely unseen (no-false-negative contract)."""
-    from pyspark.sql.types import BooleanType, StructField, StructType
+    """Cogrouped probe over :func:`build_cuckoo_shards` output (see
+    :func:`bloom.probe_shards`): each task holds exactly one shard's table
+    plus its rows.  Adds ``maybe_seen`` boolean; ``false`` ⇒ definitely
+    unseen (no-false-negative contract)."""
+    shape = (params.num_buckets_per_shard, params.bucket_size)
 
-    out_schema = StructType(
-        spark_df.schema.fields + [StructField("maybe_seen", BooleanType())]
-    )
-    cols = list(spark_df.columns)
-    n_buckets, b = params.num_buckets_per_shard, params.bucket_size
+    def kernel(shard: bytes, h: np.ndarray) -> np.ndarray:
+        table = np.frombuffer(shard, dtype=np.uint32).reshape(shape)
+        return CuckooFilter(params, table).contains_hashes(h)
 
-    def probe(key, rows: pd.DataFrame, shard: pd.DataFrame) -> pd.DataFrame:
-        if rows.empty:
-            return pd.DataFrame(columns=cols + ["maybe_seen"])
-        if shard.empty:
-            rows = rows[cols].copy()
-            rows["maybe_seen"] = False
-            return rows
-        table = np.frombuffer(bytes(shard["table"].iloc[0]), dtype=np.uint32)
-        filt = CuckooFilter(params, table.reshape(n_buckets, b).copy())
-        h = rows[hash_col].to_numpy(dtype=np.int64, na_value=0)
-        rows = rows[cols].copy()
-        rows["maybe_seen"] = filt.contains_hashes(h)
-        return rows
-
-    # shard-keyed repartition ahead of the cogroup — same AQE-coalescing
-    # guard as the sharded build (the probe kernel is the compute, not the
-    # shuffled bytes)
-    n_parts = min(
-        params.num_shards, spark_df.sparkSession.sparkContext.defaultParallelism
-    )
-    left = spark_df.withColumn(
-        "_shard", F.pmod(F.col(hash_col), F.lit(params.num_shards)).cast("int")
-    ).repartition(n_parts, "_shard").groupBy("_shard")
-    right = shards.repartition(n_parts, "shard_id").groupBy("shard_id")
-    return left.cogroup(right).applyInPandas(probe, out_schema)
+    return probe_shards(spark_df, hash_col, shards, params.num_shards, kernel, "table")

@@ -18,7 +18,7 @@ at any parallelism.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -56,16 +56,9 @@ class CrawlConfig:
     bloom_capacity: int = 1_000_000
     bloom_fpr: float = 1e-6
     bloom_shards: int = 16
-    # Bloom build/probe tier: True = fully-distributed sharded build + cogroup
-    # probe (never materializes the bit matrix on the driver — the 1e10
-    # design point); False = driver-merged broadcast tier (cheaper per epoch
-    # while the whole matrix fits comfortably in driver+executor memory);
-    # None = auto by capacity (sharded when the matrix would exceed
-    # ``bloom_driver_matrix_max_bytes``)
-    bloom_sharded: bool | None = None
-    bloom_driver_matrix_max_bytes: int = 4 << 30
-    # URL-seen prefilter family: "bloom" (bit/sharded tiers above) or
-    # "cuckoo" (operators.cuckoo — deletion-capable partial-key tables,
+    # URL-seen prefilter family: "bloom" (broadcast tier, or the sharded
+    # tier once the configured matrix exceeds _BLOOM_BROADCAST_MAX_BYTES)
+    # or "cuckoo" (operators.cuckoo — deletion-capable partial-key tables,
     # ~24 bits/URL at FPR 1e-6 vs the Bloom's 28.8, two-bucket probes).
     # Both obey the same contract: negative ⇒ definitely new; positives
     # confirm against the exact seen-set.
@@ -117,7 +110,12 @@ class CrawlConfig:
     # avoid hammering wildcard-subdomain sites).  "domain" adds one Arrow
     # pass per epoch (the PSL matcher).
     politeness_key: str = "host"
-    extra: dict = field(default_factory=dict)
+
+
+# Above this configured bit-matrix size the Bloom tier switches from the
+# driver-merged broadcast build to the sharded build + cogroup probe, which
+# never holds more than one shard in any process (the 1e10 design point).
+_BLOOM_BROADCAST_MAX_BYTES = 4 << 30
 
 
 _FETCH_RESULT_FIELDS = [
@@ -363,6 +361,8 @@ def run_crawl(
     boosts priority (see ``CrawlConfig.sitemap_weight``).  Resume stays
     bit-exact — the augmented frontier is already inside the epoch-0
     snapshot, and the affinity dim is rebuilt deterministically."""
+    if cfg.seen_filter not in ("bloom", "cuckoo"):
+        raise ValueError(f"seen_filter must be bloom|cuckoo, got {cfg.seen_filter!r}")
     store = CheckpointStore(cfg.checkpoint_dir) if cfg.checkpoint_dir else None
 
     # canonicalize the link graph once (one UDF pass over edges)
@@ -455,8 +455,7 @@ def run_crawl(
                 return df.withColumn("maybe_seen", F.lit(False))
         elif cfg.use_bloom and cfg.seen_filter == "cuckoo":
             # cuckoo tier: same prefilter contract (negative ⇒ definitely
-            # new), deletion-capable and ~17% smaller at FPR 1e-6 — the
-            # "counting-Bloom/cuckoo hybrid" realized in the loop.  Rebuilt
+            # new), deletion-capable and ~17% smaller at FPR 1e-6.  Rebuilt
             # per epoch from the membership set like the Bloom, so recrawl
             # expiry needs no in-place deletion here; remove_hashes serves
             # long-lived filters maintained across epochs.
@@ -473,17 +472,7 @@ def run_crawl(
                 return cuckoo_negative_filter_sharded(df, "url_hash", _shards, _p)
         elif cfg.use_bloom:
             params = BloomParams(cfg.bloom_capacity, cfg.bloom_fpr, cfg.bloom_shards)
-            matrix_bytes = params.m_bits_per_shard * params.num_shards // 8
-            sharded = (
-                cfg.bloom_sharded
-                if cfg.bloom_sharded is not None
-                else matrix_bytes > cfg.bloom_driver_matrix_max_bytes
-            )
-            if sharded:
-                # 1e10 design point: one shuffle on shard id builds each
-                # shard's bit array in isolation; the cogroup probe holds
-                # exactly ONE shard per task — the full matrix never exists
-                # in any single process (bloom.py:163-223)
+            if params.m_bits_per_shard * params.num_shards // 8 > _BLOOM_BROADCAST_MAX_BYTES:
                 shards = build_bloom_shards(seen, "url_hash", params).localCheckpoint()
 
                 def bloom_probe(df, _shards=shards, _p=params):
@@ -535,13 +524,6 @@ def run_crawl(
                 F.lit("unfetchable").alias("digest"),
             )
             delta = delta.unionByName(exhausted)
-        # recrawl expiry / adaptive scheduling: history is append-only;
-        # MEMBERSHIP (what dedups next epoch) is derived from it (the
-        # deletion the counting-Bloom tier models; exact side is
-        # authoritative — the Bloom is rebuilt from the membership set at
-        # the top of each epoch, so the two tiers can never disagree)
-        history = history.unionByName(delta).localCheckpoint()
-        seen = _membership(history, epoch, cfg)
 
         # next frontier: outlinks of fetched pages (+1 hop) ∪ delayed carry-over
         fetched_urls = crawl_log.filter(F.col("status") == "fetched").select(
@@ -564,7 +546,6 @@ def run_crawl(
                 (F.col("retries") + 1).alias("retries"),
             )
             frontier_df = frontier_df.unionByName(retry)
-        frontier_df = frontier_df.localCheckpoint()
 
         if store:
             # commit only this epoch's seen DELTA (O(delta), never an
@@ -578,9 +559,17 @@ def run_crawl(
             # re-read from the snapshot so lineage stays short across epochs
             history = store.read_merged(spark, epoch, "seen_delta",
                                         window=cfg.recrawl_epochs)
-            seen = _membership(history, epoch, cfg)
             frontier_df = store.read(spark, epoch, "frontier")
             crawl_log = store.read(spark, epoch, "crawl_log")
+        else:
+            # no snapshot to re-read: truncate lineage in memory instead
+            history = history.unionByName(delta).localCheckpoint()
+            frontier_df = frontier_df.localCheckpoint()
+        # recrawl expiry / adaptive scheduling: history is append-only;
+        # MEMBERSHIP (what dedups next epoch) is derived from it (exact side
+        # is authoritative — the prefilter is rebuilt from the membership set
+        # at the top of each epoch, so the two tiers can never disagree)
+        seen = _membership(history, epoch, cfg)
         logs.append(crawl_log)
 
     full_log = logs[0]

@@ -5168,8 +5168,8 @@ def line_dedup_corpus(spark, sf_dir):
     """,
 )
 def cuckoo_shard_probe(spark, sf_dir):
-    """The cuckoo half of the north-rule's "counting-Bloom/cuckoo hybrid",
-    end-to-end at the production shape: ``build_cuckoo_shards`` (one shuffle
+    """The deletion-capable URL-seen filter (cuckoo), end-to-end at the
+    production shape: ``build_cuckoo_shards`` (one shuffle
     on ``hash mod num_shards``, one task builds one shard's partial-key
     table) → cogrouped ``cuckoo_negative_filter_sharded`` probe → exact
     anti-join verify of maybe-seen candidates only.  No-false-negatives

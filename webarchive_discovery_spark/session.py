@@ -107,9 +107,11 @@ def values_df(spark, rows, schema_ddl: str):
     config table then runs 32-task stages and every broadcast build costs a
     full job (measured 0.3-0.6 s each on the annotation scopes).  A VALUES
     relation is driver-local — broadcast hash relations build without a
-    single task.  Supports str/int/float/bool/None/datetime/str-list cells;
-    column types are pinned by the DDL casts on the first row."""
+    single task.  Supports str/int/float/bool/None/datetime/str-list cells
+    (non-finite floats included; datetimes keep microseconds); column types
+    are pinned by the DDL casts on the first row."""
     import datetime as _dt
+    import math
 
     names_types = [c.strip().rsplit(" ", 1) for c in _split_ddl(schema_ddl)]
 
@@ -120,10 +122,14 @@ def values_df(spark, rows, schema_ddl: str):
             return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
         if isinstance(v, bool):
             return "true" if v else "false"
+        if isinstance(v, float) and not math.isfinite(v):
+            # a bare ``inf``/``nan`` parses as a column name
+            text = "NaN" if math.isnan(v) else ("Infinity" if v > 0 else "-Infinity")
+            return f"CAST('{text}' AS DOUBLE)"
         if isinstance(v, (int, float)):
             return repr(v)
         if isinstance(v, _dt.datetime):
-            return f"TIMESTAMP '{v.strftime('%Y-%m-%d %H:%M:%S')}'"
+            return f"TIMESTAMP '{v.strftime('%Y-%m-%d %H:%M:%S.%f')}'"
         if isinstance(v, (list, tuple)):
             return "array(" + ", ".join(cell(x, "STRING") for x in v) + ")"
         raise TypeError(f"unsupported VALUES cell {type(v)}")
