@@ -49,13 +49,10 @@ def main() -> None:
     # warm the JVM once (same methodology as bench.py)
     gate_queries.QUERIES["q1_pricing_summary"](spark, sf_dir).count()
 
-    from webarchive_discovery_spark.operators import frontier as _frontier
-
     results: dict[str, dict] = {}
     for name in names:
         fn = gate_queries.QUERIES[name]
         spark.catalog.clearCache()
-        _frontier.release_staging()
         sc._jvm.System.gc()
         sc.setJobDescription(name)
 

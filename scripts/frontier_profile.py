@@ -12,8 +12,8 @@ scale with volume — real frontiers have hosts ≫ cores):
   window  : + ``frontier.robots_match`` broadcast join +
             ``frontier.politeness_status`` (per-host slot, status, band;
             reuses the dedup exchange — no extra shuffle)
-  sequence: + ``frontier.schedule_fetches``'s range repartition, staged
-            parquet write and offset stamp (the full job)
+  sequence: + ``frontier.schedule_fetches``'s range repartition, pinned
+            ranged layout and offset stamp (the full job)
 
 Each parallelism level runs in its own JVM (a subprocess of this script).
 Inside it, every timed cut first runs once on a 2% sample (codegen, JIT and
@@ -107,7 +107,6 @@ def _level(cores: int, replication: int, trials: int, cuts: list[str]) -> dict:
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    from webarchive_discovery_spark.operators import frontier
     from webarchive_discovery_spark.session import get_spark
 
     sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
@@ -121,7 +120,6 @@ def _level(cores: int, replication: int, trials: int, cuts: list[str]) -> dict:
         obs = Observation()
         df = build(u, rules, cut, num_partitions=cores)
         df.observe(obs, F.count(F.lit(1)).alias("n")).write.format("noop").mode("overwrite").save()
-        frontier.release_staging()
         return obs.get["n"]
 
     for cut in cuts:
@@ -138,16 +136,11 @@ def _level(cores: int, replication: int, trials: int, cuts: list[str]) -> dict:
 
 def _reap_dead_tmpfs():
     """Backstop cleanup for crashed JVMs only: live sessions clean their own
-    per-pid dirs at exit (session.py atexit + frontier.release_staging), so
-    only remove staging and spark-local dirs whose process is gone — never
-    another running session's live files."""
+    per-pid dirs at exit (session.py atexit), so only remove spark-local dirs
+    whose process is gone — never another running session's live files."""
     import glob
     import shutil
 
-    for d in glob.glob("/dev/shm/wds-seq-*"):
-        pid = d.rsplit("/", 1)[-1].split("-")[2] if d.count("-") >= 2 else ""
-        if not (pid.isdigit() and os.path.exists(f"/proc/{pid}")):
-            shutil.rmtree(d, ignore_errors=True)
     for d in glob.glob("/dev/shm/spark-local-*"):
         pid = d.rsplit("-", 1)[-1]
         if not (pid.isdigit() and os.path.exists(f"/proc/{pid}")):

@@ -371,6 +371,37 @@ def test_connected_components_semantics(spark):
     assert got == {0: 0, 1: 0, 2: 0, 3: 0, 4: 4, 5: 5, 6: 5, 7: 7}
 
 
+
+def test_loop_operators_leave_shuffle_partitions_alone(spark, monkeypatch):
+    """The connected-components and IVF k-means loops size their rounds'
+    exchanges in the plan: neither writes the session-wide
+    ``spark.sql.shuffle.partitions`` (a concurrent query on the session
+    would inherit the loop's width)."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from webarchive_discovery_spark.operators.dedup import connected_components
+    from webarchive_discovery_spark.operators.similarity import ivf_train
+
+    keys = []
+    orig = RuntimeConfig.set
+
+    def record(self, key, value):
+        keys.append(key)
+        return orig(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", record)
+    verts = spark.createDataFrame([(i,) for i in range(8)], "doc_id long")
+    pairs = spark.createDataFrame([(1, 0), (2, 1), (6, 5)], "id_a long, id_b long")
+    got = {r.id: r.component
+           for r in connected_components(verts, pairs, id_col="doc_id").collect()}
+    assert got == {0: 0, 1: 0, 2: 0, 3: 3, 4: 4, 5: 5, 6: 5, 7: 7}
+    emb = spark.createDataFrame(
+        [([float(i % 3 == d) for d in range(4)],) for i in range(30)],
+        "embedding array<double>")
+    assert ivf_train(emb, dim=4, n_lists=3, iters=2).shape == (3, 4)
+    assert keys, "expected the loops' static_plans conf writes"
+    assert "spark.sql.shuffle.partitions" not in keys, keys
+
 def test_minhash_xxhash64_variant_same_candidates(spark):
     """The xxhash64 production hash family must yield the same candidate
     semantics as the oracle-parity md5 family on clear duplicates (identical
@@ -480,7 +511,6 @@ def test_global_sequence_broadcast_offset_fallback(spark, monkeypatch):
         rows = out.select("k", "seq").collect()
         seqs = [r["seq"] for r in sorted(rows, key=lambda r: r["k"])]
         assert seqs == list(range(1, 20_001)), f"non-contiguous at {parts} parts"
-        fop.release_staging()
     assert "BroadcastHashJoin" in plans[256]
     # 8x the partitions must not inflate the plan linearly (literal map would)
     assert len(plans[256]) < 2 * len(plans[32]), (len(plans[32]), len(plans[256]))
@@ -622,6 +652,28 @@ def test_simhash_components_contraction_equivalence(spark):
     comp_of = dict(contracted)
     assert comp_of[16] == 16 and len({c for _, c in contracted}) == 2
 
+
+
+def test_simhash_components_keeps_null_hash_rows(spark):
+    """A row with a NULL hash has no near neighbour: it comes out as a
+    singleton (component = its own id), as the uncontracted pairs →
+    connected_components pipeline labels it, and the output keeps one row
+    per input row."""
+    from webarchive_discovery_spark.operators.dedup import (
+        connected_components, simhash_components, simhash_near_dup_pairs)
+
+    hashes = [7, 7, None, 9, None, 0x5A00]
+    df = spark.createDataFrame(
+        [(i + 10, h) for i, h in enumerate(hashes)], "doc_id long, simhash long"
+    )
+    direct_pairs = simhash_near_dup_pairs(df, max_hamming=3)
+    direct = {(r.id, r.component) for r in connected_components(
+        df.select("doc_id"), direct_pairs.select("id_a", "id_b"),
+        id_col="doc_id").collect()}
+    rows = simhash_components(df, max_hamming=3).collect()
+    assert len(rows) == len(hashes)
+    assert {(r.id, r.component) for r in rows} == direct
+    assert {(12, 12), (14, 14)} <= direct
 
 def test_gopher_quality_filter_rules(spark):
     """Per-rule audit flags + conjunction; bullet/ellipsis line rules."""
@@ -1088,7 +1140,7 @@ def test_scaled_partitions_tracks_input_size(spark):
     ~250k rows/partition, and the function is monotone so partition counts
     never shrink as the frontier grows."""
     from webarchive_discovery_spark.operators.frontier import (
-        global_sequence, release_staging, scaled_partitions)
+        global_sequence, scaled_partitions)
 
     # unit surface: small inputs -> parallelism-capped min-rows tier,
     # large inputs -> target-rows tier
@@ -1110,44 +1162,30 @@ def test_scaled_partitions_tracks_input_size(spark):
         df = spark.range(n).select(
             F.format_string("k%09d", (F.col("id") * 7919) % n).alias("k"))
         out = global_sequence(df, [F.col("k").asc()], seq_col="seq")
-        parts = out.rdd.getNumPartitions()
-        release_staging()
-        return parts
+        return out.rdd.getNumPartitions()
 
     small, large = staged_parts(5_000), staged_parts(200_000)
     assert small <= 2, small
     assert large > small, (small, large)
 
 
-def test_global_sequence_staging_conf_and_unlistable_fallback(spark, tmp_path):
-    """r6 / verdict item 4: the staging root is conf-driven
-    (``spark.wds.staging.dir``) for cluster-visible deployments, and when
-    the driver cannot list the staged files the offset map falls back to
-    the distributed pruned ``_mid`` scan with identical offsets."""
+def test_global_sequence_results_need_no_release(spark):
+    """A ``global_sequence`` result stays valid whatever else the process
+    does: materializing one result and calling ``release_staging()`` must
+    not invalidate another, not-yet-materialized result."""
     from webarchive_discovery_spark.operators.frontier import (
-        _EPHEMERAL_STAGING, _partition_offsets, global_sequence,
-        release_staging)
+        global_sequence, release_staging)
 
-    root = tmp_path / "staging-root"
-    spark.conf.set("spark.wds.staging.dir", str(root))
-    try:
-        df = spark.range(10_000).select(
-            F.format_string("k%06d", F.col("id")).alias("url_key"))
-        out = global_sequence(df, [F.col("url_key").asc()], seq_col="seq")
-        rows = {r.url_key: r.seq for r in out.collect()}
-        assert rows == {f"k{i:06d}": i + 1 for i in range(10_000)}
-        # staged under the configured root
-        staged = _EPHEMERAL_STAGING[-1]
-        assert staged.startswith(str(root))
-        local = spark.read.parquet(staged)
-        fast = _partition_offsets(spark, local, staged)
-        # driver-unlistable staging path (no part-* visible) must raise in
-        # the footer fast path and fall back to the Spark scan — offsets
-        # identical
-        fallback = _partition_offsets(
-            spark, local, str(tmp_path / "does-not-exist"))
-        assert fallback == fast
-        assert len(rows) == 10_000
-    finally:
-        spark.conf.unset("spark.wds.staging.dir")
-        release_staging()
+    def keyed(n):
+        return spark.range(n).select(
+            F.format_string("k%06d", (F.col("id") * 7919) % n).alias("k"))
+
+    first = global_sequence(keyed(3_000), [F.col("k").asc()], seq_col="seq")
+    second = global_sequence(keyed(5_000), [F.col("k").asc()], seq_col="seq")
+    assert len(first.collect()) == 3_000
+    release_staging()
+    rows = second.collect()
+    assert sorted(r["seq"] for r in rows) == list(range(1, 5_001))
+    assert [r["k"] for r in sorted(rows, key=lambda r: r["seq"])] == sorted(
+        r["k"] for r in rows)
+    assert release_staging() == 0  # a documented no-op

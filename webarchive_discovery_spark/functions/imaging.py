@@ -6,17 +6,18 @@ and validates payloads by digest; our fetch-simulation additionally checks a
 decoded-pixel invariant (PSNR ≥ 40 dB for lossy formats — BASELINE.json
 ``input_hint``).
 
-Codecs available in this sandbox (no Pillow / libjpeg):
+Codecs (pure Python/numpy — no Pillow or libjpeg, so encoded bytes, decoded
+pixels and every digest derived from them are the same on every host):
 
 - ``png``  — real minimal PNG (8-bit RGB, filter 0, zlib), lossless.
 - ``bmp``  — real uncompressed 24-bit BMP, lossless.
 - ``jpeg`` — **real pure-numpy JPEG codec** (``functions/jpeg.py``):
   baseline + progressive decode (verified against ``javax.imageio`` on the
   reference's facedetection corpus), baseline 4:4:4 encode with optimal
-  Huffman tables.  Pillow is preferred when importable.  The legacy
-  deterministic fake lossy container (``WDSQ``) remains decodable and is
-  still what ``encode_fake_lossy`` emits — gate corpora whose oracles
-  hard-code its 5-bit quantization arithmetic depend on it.
+  Huffman tables.  The legacy deterministic fake lossy container
+  (``WDSQ``) remains decodable and is still what ``encode_fake_lossy``
+  emits — gate corpora whose oracles hard-code its 5-bit quantization
+  arithmetic depend on it.
 - decode-only, for arbitrary crawled payloads: full-spec PNG
   (``functions/png.py`` — every filter/color type/bit depth, Adam7) and
   GIF87a/89a (``functions/gif.py`` — LZW, interlace, transparency,
@@ -34,15 +35,6 @@ import zlib
 
 import numpy as np
 
-try:  # real codecs if available
-    import io
-
-    from PIL import Image  # type: ignore
-
-    HAVE_PIL = True
-except Exception:  # pragma: no cover - sandbox has no Pillow
-    HAVE_PIL = False
-
 __all__ = [
     "encode_image",
     "encode_fake_lossy",
@@ -53,7 +45,6 @@ __all__ = [
     "resize_nearest",
     "encode_fake_video",
     "sample_video_frames",
-    "HAVE_PIL",
 ]
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -154,7 +145,7 @@ def _bmp_dims(data: bytes) -> tuple[int, int]:
 
 
 # ---------------------------------------------------------------------------
-# Deterministic fake lossy codec ("jpeg" stand-in when Pillow is absent)
+# Deterministic fake lossy codec (the legacy "jpeg" stand-in, WDSQ container)
 # ---------------------------------------------------------------------------
 
 _QUANT_BITS = 5  # 5-bit/channel → max error 4/255 → PSNR ≈ 40.9 dB
@@ -191,10 +182,6 @@ def encode_image(rgb: np.ndarray, fmt: str) -> bytes:
     if fmt == "bmp":
         return _encode_bmp(rgb)
     if fmt in ("jpeg", "jpg"):
-        if HAVE_PIL:  # pragma: no cover
-            buf = io.BytesIO()
-            Image.fromarray(rgb).save(buf, format="JPEG", quality=95)
-            return buf.getvalue()
         from .jpeg import encode_jpeg
 
         return encode_jpeg(rgb, quality=95)
@@ -202,8 +189,8 @@ def encode_image(rgb: np.ndarray, fmt: str) -> bytes:
 
 
 def encode_fake_lossy(rgb: np.ndarray) -> bytes:
-    """The deterministic fake lossy codec UNCONDITIONALLY (even when Pillow
-    is importable) — for corpora whose expected values are derived from the
+    """The deterministic fake lossy codec (not the real JPEG encoder) — for
+    corpora whose expected values are derived from the
     5-bit quantization arithmetic and must not depend on a real JPEG
     encoder's ringing (``decode_image`` dispatches on the WDSQ signature
     first, so these bytes round-trip identically everywhere)."""
@@ -228,8 +215,6 @@ def decode_image(data: bytes, fmt: str) -> np.ndarray:
     if fmt in ("jpeg", "jpg"):
         if data[:4] == _FAKE_JPEG_SIG:
             return _decode_fake_jpeg(data)
-        if HAVE_PIL:  # pragma: no cover
-            return np.asarray(Image.open(io.BytesIO(data)).convert("RGB"))
         from .jpeg import decode_jpeg
 
         return decode_jpeg(data)

@@ -386,8 +386,12 @@ def connected_components(
       InMemoryRelation lineage made per-round planning cost GROW with the
       round number (measured 3× slower end-to-end despite fewer
       exchanges).
+    - the round is join-free: two aggregates on ``id`` (labels meet the
+      out-neighbour lists, then every vertex's offered labels fold with
+      its own), so a one-partition loop needs no exchange at all and a
+      wider one shuffles only the offers.
     - the convergence metric is computed BELOW the final projection, so the
-      checkpointed rows stay ``(id, component)`` — the ``_nc`` comparison
+      checkpointed rows stay ``(id, component)`` — the ``_own`` comparison
       column never materializes.
     - the edge list skips a ``distinct`` (a full exchange+aggregate):
       every producer in this repo emits each unordered pair once, and min()
@@ -399,8 +403,9 @@ def connected_components(
       adaptive re-planning buys nothing here).  Skew safety does not regress:
       vertex degree is bounded by construction — every candidate producer
       caps band buckets (``max_bucket_size``/block decomposition), so no
-      hot key can concentrate a round's join.  On a cluster the loop's
-      exchanges use ``spark.sql.shuffle.partitions`` as configured.
+      hot key can concentrate a round's aggregate.  The loop's exchanges are
+      explicit ``repartition(loop_parts, key)`` calls sized from the edge
+      count; the session's ``spark.sql.shuffle.partitions`` is left alone.
 
     Deterministic at any parallelism: labels are pure min() folds of data
     values."""
@@ -417,7 +422,7 @@ def connected_components(
         # emits the same rows (r6, guide §2.4 — the union's second subtree
         # was an un-reused duplicate of the first)
         eobs = Observation()
-        sym = (
+        adj = (
             pairs.select(
                 F.explode(
                     F.array(
@@ -435,55 +440,84 @@ def connected_components(
             # LOOP's exchanges below — no separate count job
             .observe(eobs, F.count(F.lit(1)).alias("n"))
             .repartition(n_parts, "src")
+            # pinned as out-neighbour lists: every round meets them with the
+            # labels, and grouping them once here keeps the per-round work
+            # to two aggregates on id
+            .groupBy(F.col("src").alias("id"))
+            .agg(F.collect_list("dst").alias("_nbrs"))
             .localCheckpoint()
         )
-        # Scale-adaptive loop width (r6): every round's exchanges use
-        # spark.sql.shuffle.partitions, a cluster-sized constant — for the
-        # frequent small-graph case (post-exact-dedup near-dup graphs) each
-        # round then schedules dozens of near-empty tasks per stage.  Derive
-        # the loop's partition count from the MEASURED edge count instead
-        # (ceil(n/32k) capped at the configured width, floor 1 — the same
-        # scaled_partitions policy as global_sequence); restore the conf
-        # after the loop.  Results are partitioning-independent min-folds.
+        # Scale-adaptive loop width (r6): size the loop from the MEASURED
+        # edge count (ceil(n/32k) capped at the session width — the same
+        # scaled_partitions policy as global_sequence) instead of a
+        # cluster-sized constant that schedules dozens of near-empty tasks
+        # per round for the frequent small-graph case (post-exact-dedup
+        # near-dup graphs).  The width lives in the plan, not in session
+        # conf: every exchange of the loop is an explicit
+        # repartition(loop_parts, key), and each round's labels checkpoint
+        # keeps the hash(id) layout for the next round.  One partition is a
+        # narrow coalesce(1) instead: it satisfies every grouping, so a round
+        # then runs as one stage with no exchange at all.
         from ..operators.frontier import scaled_partitions
 
-        n_edges = eobs.get["n"]
-        loop_parts = min(n_parts, scaled_partitions(n_edges, n_parts))
-        if loop_parts < n_parts:
-            sym = sym.coalesce(loop_parts)  # narrow — no job, no shuffle
-        conf_key = "spark.sql.shuffle.partitions"
-        was_parts = spark.conf.get(conf_key)
-        spark.conf.set(conf_key, str(loop_parts))
-        try:
-            # the initial labels are NOT checkpointed: they are only read by
-            # round 1 (whose checkpoint replaces them), and their lineage is
-            # a projection of the caller's (usually already-pinned) vertex
-            # set — one job saved per call
-            labels = vertices.select(
-                F.col(id_col).alias("id"), F.col(id_col).alias("component")
+        loop_parts = min(n_parts, scaled_partitions(eobs.get["n"], n_parts))
+
+        def at_loop_width(df: DataFrame, key: str) -> DataFrame:
+            if loop_parts == 1:
+                return df.coalesce(1)
+            return df.repartition(loop_parts, key)
+
+        # no exchange when loop_parts == n_parts: adj is hash(id)-partitioned
+        adj = at_loop_width(adj, "id")
+        nbrs_type = adj.schema["_nbrs"].dataType
+        no_comp = F.lit(None).cast(vertices.schema[id_col].dataType)
+        # the initial labels are NOT checkpointed: they are only read by
+        # round 1 (whose checkpoint replaces them), and their lineage is a
+        # projection of the caller's (usually already-pinned) vertex set —
+        # one job saved per call
+        labels = at_loop_width(vertices.select(
+            F.col(id_col).alias("id"), F.col(id_col).alias("component")
+        ), "id")
+        for _ in range(max_iter):
+            # Join-free round, two aggregates on id: (1) meet each vertex's
+            # label with its out-neighbour list — labels and adj share the
+            # hash(id) layout, so the union needs no exchange — (2) every
+            # vertex offers its label to its neighbours and keeps its own
+            # (``_own``); the min over offers is the new label.  Ids that
+            # only appear in edges carry no own label and are dropped.
+            met = (
+                at_loop_width(
+                    labels.withColumn("_nbrs", F.lit(None).cast(nbrs_type))
+                    .unionByName(adj.withColumn("component", no_comp)),
+                    "id",
+                )
+                .groupBy("id")
+                .agg(F.min("component").alias("component"), F.max("_nbrs").alias("_nbrs"))
             )
-            for _ in range(max_iter):
-                nbr = (
-                    sym.join(labels, sym["src"] == labels["id"])
-                    .groupBy(F.col("dst").alias("id"))
-                    .agg(F.min("component").alias("_nc"))
-                )
-                obs = Observation()
-                labels = (
-                    labels.join(nbr, "id", "left")
-                    # strictly-smaller neighbor label ⇒ this round changed
-                    # something; count(when(...)) is null-safe for label-less
-                    # vertices (left-join miss ⇒ _nc null ⇒ not counted)
-                    .observe(obs, F.count(
-                        F.when(F.col("_nc") < F.col("component"), True)
-                    ).alias("n_improved"))
-                    .select("id", F.least("component", "_nc").alias("component"))
-                    .localCheckpoint()
-                )
-                if obs.get["n_improved"] == 0:
-                    break
-        finally:
-            spark.conf.set(conf_key, was_parts)
+            nbrs_or_none = F.coalesce("_nbrs", F.array().cast(nbrs_type))
+            offers = met.select(
+                F.explode(F.concat(F.array("id"), nbrs_or_none)).alias("_to"),
+                "id", "component",
+            ).select(
+                F.col("_to").alias("id"), "component",
+                F.when(F.col("_to") == F.col("id"), F.col("component")).alias("_own"),
+            )
+            obs = Observation()
+            labels = (
+                at_loop_width(offers, "id")
+                .groupBy("id")
+                .agg(F.min("component").alias("component"), F.max("_own").alias("_own"))
+                .filter(F.col("_own").isNotNull())
+                # a strictly-smaller neighbour label ⇒ this round changed
+                # something
+                .observe(obs, F.count(
+                    F.when(F.col("component") < F.col("_own"), True)
+                ).alias("n_improved"))
+                .select("id", "component")
+                .localCheckpoint()
+            )
+            if obs.get["n_improved"] == 0:
+                break
     return labels
 
 
@@ -622,8 +656,13 @@ def simhash_components(
     ``min(id)`` per hash, so propagated min-labels equal the min over the
     member union, and members inherit exactly the label the full graph
     would give them (asserted by test_dedup's contraction-equivalence
-    case).  Returns ``(id, component)`` for every input row."""
-    reps = hashes.groupBy(hash_col).agg(F.min(id_col).alias("_rep"))
+    case).  A NULL hash has no near neighbour (its band values never
+    join), so each NULL-hash row is its own singleton, as the uncontracted
+    pipeline labels it.  Returns ``(id, component)`` for every input row."""
+    reps = (
+        hashes.filter(F.col(hash_col).isNotNull())
+        .groupBy(hash_col).agg(F.min(id_col).alias("_rep"))
+    )
     rep_pairs = simhash_near_dup_pairs(
         reps, max_hamming=max_hamming, id_col="_rep", hash_col=hash_col,
         bits=bits, bands=bands,
@@ -635,9 +674,12 @@ def simhash_components(
     rep_comp = reps.join(comps, reps["_rep"] == comps["id"]).select(
         hash_col, "component"
     )
+    singletons = hashes.filter(F.col(hash_col).isNull()).select(
+        F.col(id_col).alias("id"), F.col(id_col).alias("component")
+    )
     return hashes.join(rep_comp, hash_col).select(
         F.col(id_col).alias("id"), "component"
-    )
+    ).unionByName(singletons)
 
 
 def duplicated_substring_spans(

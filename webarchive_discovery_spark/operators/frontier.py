@@ -15,7 +15,10 @@ re-expression of the reference's crawl semantics —
   ``Annotator.java:217-225``, robots accounting ``HostsReportMapper.java:49-66``
 - priority inputs (inlink counts): ``OutlinkExtractorMapper.java:57-87``
 - per-host politeness accounting: ``HostsReportMapper.java:52-77``
-- total-order fetch scheduling: ``ArchiveCDXGenerator.java:208-215``
+- total-order fetch scheduling: ``ArchiveCDXGenerator.java:208-215`` —
+  :func:`global_sequence`, the range-offset kernel (range partition, pinned
+  ranged layout, per-partition offsets) that ``packing.packed_sequences``
+  also runs
 - skew handling: salted keys replacing random reducer keys
   (``WARCIndexerMapper.java:222-230``)
 
@@ -44,11 +47,11 @@ __all__ = [
     "parse_robots_txt",
     "recrawl_schedule",
     "release_staging",
-    "staging_mark",
 ]
 
-# Past this many staged partitions, global_sequence switches its offset map
-# from a literal create_map expression to a broadcast join (plan-size bound).
+# Past this many range partitions, the offset step of global_sequence and
+# packing.packed_sequences (_with_range_offsets) switches its offset map from a
+# literal create_map expression to a broadcast join (plan-size bound).
 _OFFSET_LITERAL_MAX = 1024
 
 # Target rows per range-sort partition for global_sequence.  Frontier rows
@@ -59,9 +62,9 @@ _OFFSET_LITERAL_MAX = 1024
 # contention-sensitive on a shared host) while a 10^10-row frontier still
 # fans out to ~40k partitions (the broadcast offset-join path).
 _SEQ_TARGET_ROWS_PER_PARTITION = 250_000
-# Below the big-data target, still spread the sort/staging write over a few
-# cores (one task per _SEQ_MIN_ROWS rows) up to defaultParallelism — a 100k-
-# row epoch gets ~4 parallel writers instead of 1 slow one or 32 trivial ones.
+# Below the big-data target, still spread the range sort over a few cores
+# (one task per _SEQ_MIN_ROWS rows) up to defaultParallelism — a 100k-row
+# epoch gets ~4 parallel sorters instead of 1 slow one or 32 trivial ones.
 _SEQ_MIN_ROWS_PER_PARTITION = 32_768
 
 
@@ -76,43 +79,12 @@ def scaled_partitions(n_rows: int, parallelism: int = 32,
     small = min(parallelism, -(-n_rows // min_rows)) if n_rows else 1
     return max(1, big, small)
 
-# Ephemeral global_sequence staging dirs (tmpfs): registered here, reclaimed
-# by release_staging() once the caller has materialized the result, and as a
-# backstop at interpreter exit.
-_EPHEMERAL_STAGING: list[str] = []
 
-
-def _register_staging(path: str) -> None:
-    import atexit
-
-    if not _EPHEMERAL_STAGING:
-        atexit.register(release_staging)
-    _EPHEMERAL_STAGING.append(path)
-
-
-def staging_mark() -> int:
-    """Snapshot the staging registry; pass to :func:`release_staging` to
-    reclaim only dirs created AFTER this point (epoch-scoped cleanup that
-    cannot delete staging backing some other, not-yet-materialized
-    ``global_sequence`` DataFrame in the same process)."""
-    return len(_EPHEMERAL_STAGING)
-
-
-def release_staging(since: int = 0) -> int:
-    """Delete ephemeral staging dirs created by :func:`global_sequence`
-    after the :func:`staging_mark` snapshot ``since`` (default 0 = all).
-
-    Only call once the DataFrames whose staging is being released have been
-    fully materialized (collected, written, or ``localCheckpoint``-ed) —
-    they scan the staging path lazily.  Returns the number of dirs removed."""
-    import shutil
-
-    n = 0
-    while len(_EPHEMERAL_STAGING) > since:
-        path = _EPHEMERAL_STAGING.pop()
-        shutil.rmtree(path, ignore_errors=True)
-        n += 1
-    return n
+def release_staging() -> int:
+    """No-op, kept for callers written against the parquet staging store
+    that :func:`global_sequence` once used: a ``global_sequence`` result
+    now needs no cleanup by its caller.  Returns 0."""
+    return 0
 
 
 def canonicalize_frontier(df: DataFrame, url_col: str = "url") -> DataFrame:
@@ -306,169 +278,89 @@ def global_sequence(
     order_cols: list,
     seq_col: str = "fetch_seq",
     num_partitions: int | None = None,
-    staging_dir: str | None = None,
 ) -> DataFrame:
     """Contiguous global sequence number in a total order WITHOUT a
     single-partition sort — the scalable equivalent of
     ``row_number() OVER (ORDER BY …)`` (the reference gets the same effect
     from ``TotalOrderPartitioner``, ``ArchiveCDXGenerator.java:208-215``).
 
-    Plan: range-repartition on the order columns, sort within partitions,
-    stamp ``monotonically_increasing_id`` — whose documented encoding is
-    ``(partition_id << 33) | consecutive-counter``, i.e. the local rank falls
-    out of the sorted shuffle for free (no window, no re-sort) — then write
-    ONCE to the staging sink and derive per-partition offsets from a pruned
-    scan of the written ``_mid`` column.  A single materialization, and it is
-    the durable epoch output the caller needs anyway (epoch results must be
-    persisted for checkpoint/resume); in-memory persist/localCheckpoint of
-    wide rows measured 3-4× slower and badly thread-contended.
+    Plan (:func:`_range_checkpoint` + :func:`_with_range_offsets`, shared
+    with ``packing.packed_sequences``): range-repartition on the order
+    columns, sort within partitions, stamp ``monotonically_increasing_id``
+    — whose documented encoding is ``(partition_id << 33) |
+    consecutive-counter``, i.e. the local rank falls out of the sorted
+    shuffle for free (no window, no re-sort) — and pin that ranged layout
+    with ``localCheckpoint``; one small per-partition count aggregate over
+    the pin then gives the cumulative partition offsets.  The result reads
+    only block-manager storage, so it needs no cleanup by its caller.
 
     ``order_cols`` must be a unique key (all engine call sites use
     ``url_key``) or tie placement across range boundaries would be
-    partition-dependent.
+    partition-dependent."""
+    ranged = _range_checkpoint(df, order_cols, num_partitions)
+    local_rank = F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1))
+    return _with_range_offsets(
+        ranged, ranged, F.lit(1), local_rank + 1, seq_col
+    ).drop("_mid")
 
-    When ``staging_dir`` is None the staging copy is ephemeral: it is
-    registered for cleanup at interpreter exit, and callers that fully
-    materialize the result (e.g. the crawl loop's per-epoch
-    ``localCheckpoint``) should call :func:`release_staging` to reclaim the
-    space immediately — staging lives on tmpfs, so leaking one dir per epoch
-    eats host RAM."""
-    import os
-    import tempfile
 
-    spark = df.sparkSession
-    master = spark.conf.get("spark.master", "")
-    # Pin the input ONCE before the range exchange: repartitionByRange runs
-    # a separate boundary-SAMPLING job over its child, so an unpinned input
-    # executes the whole upstream twice (the frontier epoch's Python-UDF
-    # canonicalize + dedup + politeness window — measured 40% of the epoch's
-    # wall time at sf0.1 in a same-window A/B).  The pin is block-manager
-    # storage freed by the ContextCleaner when the plan is dropped; the
-    # parquet staging below remains the durable copy.  (A/B note: pinning
-    # via persist(MEMORY_AND_DISK)+count — one job instead of two — measured
-    # ~2x SLOWER end-to-end here: the storage-level write path is badly
-    # thread-contended at local[32], same finding as round 3.)
-    # Size the range exchange to the DATA, not defaultParallelism: a small
-    # epoch stops paying 32 partitions of scheduling overhead while a
-    # 10^10-row frontier still fans out to ~40k partitions (offset-join
-    # path).  The row count rides the pin's materialization job as an
-    # observe() metric — no separate count job (r6: 2 jobs → 1 here).
+def _range_checkpoint(df: DataFrame, order_cols: list,
+                      num_partitions: int | None = None) -> DataFrame:
+    """``df`` range-partitioned and sorted on ``order_cols``, stamped with
+    ``_mid`` (``monotonically_increasing_id``: range partition id in bits
+    33+, in-partition rank below) and pinned with ``localCheckpoint`` — so
+    the offsets aggregate and the final plan see the SAME execution-time-
+    sampled range boundaries.
+
+    The input is pinned first: ``repartitionByRange`` runs a separate
+    boundary-sampling job over its child, so an unpinned input would
+    execute the whole upstream twice (the frontier epoch's Python-UDF
+    canonicalize + dedup + politeness window).  The pin's job also counts
+    the rows (``observe``), which size the range exchange to the data via
+    :func:`scaled_partitions` unless ``num_partitions`` is given."""
     from pyspark.sql import Observation
 
     obs = Observation()
     df = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
-    n_rows = obs.get["n"]
     parts = num_partitions or scaled_partitions(
-        n_rows, spark.sparkContext.defaultParallelism
-    )
-    ranged = df.repartitionByRange(parts, *order_cols).sortWithinPartitions(*order_cols)
-    staged = ranged.withColumn("_mid", F.monotonically_increasing_id())
-    # Staging root resolution (r6, closes the r5 verdict's cluster footgun):
-    # 1. ``spark.wds.staging.dir`` conf — REQUIRED on a real cluster; set it
-    #    to a cluster-visible path (HDFS/object store/shared FS).  Executors
-    #    write there and, when the driver cannot list it, the offset map
-    #    falls back to the pruned ``_mid`` scan automatically
-    #    (``_partition_offsets``'s except-branch — pytest-covered).
-    # 2. local masters: /dev/shm tmpfs — this ephemeral materialization
-    #    stands in for a distributed-store write whose bandwidth scales
-    #    with executors; a single shared disk would cap it (sandbox
-    #    artifact, not plan property).
-    # 3. otherwise the system temp dir.
-    conf_root = spark.conf.get("spark.wds.staging.dir", None)
-    if conf_root:
-        if "://" not in conf_root:  # URI roots (hdfs://, s3a://) are not local dirs
-            os.makedirs(conf_root, exist_ok=True)
-        tmp_base = conf_root
-    elif master.startswith("local") and os.path.isdir("/dev/shm"):
-        tmp_base = "/dev/shm"
-    else:
-        tmp_base = None
-    if staging_dir is not None:
-        path = staging_dir
-    elif tmp_base and "://" in tmp_base:
-        # URI staging root (hdfs://, s3a://): build the path textually; the
-        # write below creates it.  Cleanup of URI staging is left to the
-        # deployment (a TTL'd scratch bucket/dir) — shutil cannot reach it.
-        import uuid
-
-        path = f"{tmp_base.rstrip('/')}/wds-seq-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    else:
-        path = tempfile.mkdtemp(prefix=f"wds-seq-{os.getpid()}-", dir=tmp_base)
-        _register_staging(path)
-    # lz4 for the ephemeral staging copy: measured 20% faster end-to-end
-    # than snappy on the fetch-order epoch (3.0s → 2.4s at sf0.1; the pure-
-    # execution noop floor is 2.1s, so lz4 staging costs ~0.3s over not
-    # writing at all).  Durability/compat don't matter here — the dir dies
-    # with the job; the durable epoch snapshots (checkpoint.py) keep their
-    # default codec.
-    staged.write.mode("overwrite").option("compression", "lz4").parquet(path)
-    df.unpersist(blocking=False)  # staging parquet is the durable copy now
-    local = spark.read.parquet(path)
-    offsets = _partition_offsets(spark, local, path)
-    local_rank = F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1))
-    pid = F.shiftright("_mid", 33)
-    if len(offsets) <= _OFFSET_LITERAL_MAX:
-        # small partition counts: fold offsets into a literal map (constant-
-        # folded, zero extra operators)
-        mapping = F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])
-        return local.withColumn(seq_col, mapping[pid] + local_rank + 1).drop("_mid")
-    # very high partition counts (10k+ on a big cluster): a literal map would
-    # bloat the plan tree super-linearly (every operator carries the
-    # expression) — join the tiny (pid, offset) table broadcast instead; plan
-    # size stays O(1) in the partition count
-    odf = spark.createDataFrame(
-        [(int(p), int(o)) for p, o in offsets.items()], "_pid bigint, _off bigint"
+        obs.get["n"], df.sparkSession.sparkContext.defaultParallelism
     )
     return (
-        local.withColumn("_pid", pid)
-        .join(F.broadcast(odf), "_pid")
-        .withColumn(seq_col, F.col("_off") + local_rank + 1)
-        .drop("_mid", "_pid", "_off")
+        df.repartitionByRange(parts, *order_cols)
+        .sortWithinPartitions(*order_cols)
+        .withColumn("_mid", F.monotonically_increasing_id())
+        .localCheckpoint()
     )
 
 
-def _partition_offsets(spark, local: DataFrame, path: str) -> dict[int, int]:
-    """Cumulative row offsets per staging partition, keyed by the partition id
-    embedded in ``monotonically_increasing_id`` (bits 33+).
-
-    Fast path: the writer emits one ``part-NNNNN`` file per task, and the task
-    partition index IS the ``_mid`` partition id (both are assigned in the
-    same stage), so the offsets fall out of the parquet FOOTERS — zero Spark
-    jobs, a driver-side metadata read.  Falls back to a pruned ``_mid`` scan
-    if the directory layout doesn't match that invariant (e.g. a future
-    writer that splits task output across files)."""
-    import glob
-    import re
-
-    try:
-        import pyarrow.parquet as pq
-
-        files = sorted(glob.glob(f"{path}/part-*"))
-        if not files:
-            # e.g. staging on a filesystem the driver can't glob — MUST raise
-            # so the Spark-scan fallback runs instead of silently mapping
-            # every row's sequence to NULL
-            raise ValueError(f"no part-* files visible at {path}")
-        pids = [int(re.match(r"part-(\d+)", f.rsplit("/", 1)[1]).group(1)) for f in files]
-        if len(set(pids)) != len(pids):
-            raise ValueError("duplicate part numbers")
-        counts = [(pid, pq.ParquetFile(f).metadata.num_rows) for pid, f in zip(pids, files)]
-    except Exception:
-        counts = [
-            (int(r["_pid"]), r["_cnt"])
-            for r in (
-                local.groupBy(F.shiftright("_mid", 33).alias("_pid"))
-                .agg(F.count(F.lit(1)).alias("_cnt"))
-                .orderBy("_pid")
-                .collect()
-            )
-        ]
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid, cnt in sorted(counts):
-        offsets[pid] = acc
-        acc += cnt
-    return offsets
+def _with_range_offsets(df: DataFrame, ranged: DataFrame, weight: Column,
+                        local: Column, out_col: str) -> DataFrame:
+    """Add ``out_col`` = (sum of ``weight`` over every EARLIER range
+    partition of ``ranged``) + ``local`` to ``df``, which carries the same
+    ``_mid`` stamp (:func:`_range_checkpoint`).  The per-partition sums
+    come from one small aggregate over the pin; their cumulative offsets
+    are folded into a literal map, or past :data:`_OFFSET_LITERAL_MAX`
+    partitions joined as a broadcast ``(pid, offset)`` table — a literal
+    map would bloat the plan tree with the partition count, the join keeps
+    plan size O(1)."""
+    pid = F.shiftright("_mid", 33)
+    totals = ranged.groupBy(pid.alias("_pid")).agg(F.sum(weight).alias("_w")).collect()
+    offsets, acc = {}, 0
+    for p, w in sorted((int(r["_pid"]), int(r["_w"] or 0)) for r in totals):
+        offsets[p] = acc
+        acc += w
+    if len(offsets) <= _OFFSET_LITERAL_MAX:
+        mapping = F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])
+        return df.withColumn(out_col, mapping[pid] + local)
+    odf = df.sparkSession.createDataFrame(
+        list(offsets.items()), "_pid bigint, _off bigint"
+    )
+    return (
+        df.withColumn("_pid", pid)
+        .join(F.broadcast(odf), "_pid")
+        .withColumn(out_col, F.col("_off") + local)
+        .drop("_pid", "_off")
+    )
 
 
 _SALT_ID_CANDIDATES = ("url_hash", "url_key", "record_id", "event_id",

@@ -15,13 +15,13 @@ the beyond-reference LLM-pipeline surface.)
 100 TB design: a global running sum is the classic "don't use a
 single-partition window" trap.  The input here is the *token-count table*
 (id, n_tokens, order key — tens of bytes/row), not the corpus, so the
-plan is: range-repartition on the order key, one window cumsum WITHIN each
+plan is ``frontier.global_sequence``'s range-offset kernel: range-partition
+and sort on the order key and pin that layout, one window cumsum WITHIN each
 partition (the window's pid hash-exchange keeps partitions whole — the
 narrow table shuffles once more, never the corpus), then bridge partitions
-with per-partition totals — a P-row driver fetch folded into a literal map
-(broadcast-join fallback past :data:`frontier._OFFSET_LITERAL_MAX`, same
-discipline as ``frontier.global_sequence``).  No single-partition stage
-anywhere.
+with per-partition token totals — one P-row aggregate folded into a literal
+map, or a broadcast join past :data:`frontier._OFFSET_LITERAL_MAX`
+partitions.  No single-partition stage anywhere.
 """
 
 from __future__ import annotations
@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .frontier import _OFFSET_LITERAL_MAX
+from .frontier import _range_checkpoint, _with_range_offsets
 
 __all__ = ["packed_sequences", "sequence_manifest"]
 
@@ -46,26 +46,15 @@ def packed_sequences(
     fixed-``max_len`` training sequences it lands in), and ``n_seqs``.
     ``order_cols`` must be a unique key — ties crossing a range boundary
     would otherwise make placement partition-dependent."""
-    spark = df.sparkSession
-    # Pin the narrow token-count input FIRST (one upstream scan: the range
-    # boundary-sampling job and the exchange both read the pin), size the
-    # range exchange from the measured row count (cached-block scan) like
-    # the frontier's global_sequence, then pin the RANGED layout too: the
-    # totals fetch below and the final plan must see the SAME execution-
-    # time-sampled boundaries.  Both pinned copies are ~tens of bytes/row,
-    # small even when the corpus is 100 TB.
-    from .frontier import scaled_partitions
-
-    df = df.localCheckpoint()
-    parts = num_partitions or scaled_partitions(
-        df.count(), spark.sparkContext.defaultParallelism
+    # The range layout and the cross-partition offsets are global_sequence's
+    # (frontier._range_checkpoint / _with_range_offsets): the pinned ranged
+    # copy of the narrow token-count table is ~tens of bytes/row, small even
+    # when the corpus is 100 TB.  Inside a range partition the running sum
+    # is one window keyed on the partition id, in ``_mid`` (= sorted) order.
+    ranged = _range_checkpoint(df, order_cols, num_partitions).withColumn(
+        "_pid", F.shiftright("_mid", 33)
     )
-    ranged = (
-        df.repartitionByRange(parts, *order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    w = Window.partitionBy("_pid").orderBy(*order_cols)
+    w = Window.partitionBy("_pid").orderBy("_mid")
     local = ranged.withColumn(
         "_local_before",
         F.coalesce(
@@ -73,27 +62,9 @@ def packed_sequences(
             F.lit(0),
         ),
     )
-    totals = sorted(
-        (int(r["_pid"]), int(r["_tot"]))
-        for r in ranged.groupBy("_pid")
-        .agg(F.sum(token_col).alias("_tot"))
-        .collect()
+    out = _with_range_offsets(
+        local, ranged, F.col(token_col), F.col("_local_before"), "pack_start"
     )
-    offsets, acc = {}, 0
-    for pid, tot in totals:
-        offsets[pid] = acc
-        acc += tot
-    if len(offsets) <= _OFFSET_LITERAL_MAX:
-        mapping = F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])
-        start = mapping[F.col("_pid")] + F.col("_local_before")
-        out = local.withColumn("pack_start", start)
-    else:
-        odf = spark.createDataFrame(
-            [(p, o) for p, o in offsets.items()], "_pid int, _off bigint"
-        )
-        out = local.join(F.broadcast(odf), "_pid").withColumn(
-            "pack_start", F.col("_off") + F.col("_local_before")
-        ).drop("_off")
     n = F.col(token_col)
     return (
         out.withColumn("seq_first", F.floor(F.col("pack_start") / max_len))
@@ -103,7 +74,7 @@ def packed_sequences(
             .otherwise(F.col("seq_first")),
         )
         .withColumn("n_seqs", F.col("seq_last") - F.col("seq_first") + 1)
-        .drop("_pid", "_local_before")
+        .drop("_pid", "_mid", "_local_before")
     )
 
 

@@ -397,7 +397,7 @@ def ivf_train(
     # scan + sample + cast re-execute once per iteration
     vecs = embeddings.select(_as_double(F.col(vec_col)).alias("vec")).persist()
     # the explicit count both materializes the cache BEFORE the first Lloyd
-    # round (instead of round 1 paying it) and sizes the loop's exchanges
+    # round (instead of round 1 paying it) and sizes the loop's exchange
     # from the data: the per-round aggregates operate on n_vecs x dim
     # posexploded rows, so a cluster-width shuffle constant schedules mostly
     # empty tasks for small training sets (scale-adaptive width, same
@@ -407,21 +407,15 @@ def ivf_train(
     n_vecs = vecs.count()
     parallelism = spark.sparkContext.defaultParallelism
     loop_parts = min(parallelism, scaled_partitions(n_vecs * dim, parallelism))
-    conf_key = "spark.sql.shuffle.partitions"
-    was_parts = spark.conf.get(conf_key)
     with static_plans(spark):  # fixed-shape Lloyd rounds: plan statically
-        spark.conf.set(conf_key, str(loop_parts))
-        try:
-            cents = _lloyd_rounds(
-                spark, vecs, cents, dim, iters, _collect_audit
-            )
-        finally:
-            spark.conf.set(conf_key, was_parts)
+        cents = _lloyd_rounds(
+            spark, vecs, cents, dim, iters, loop_parts, _collect_audit
+        )
     vecs.unpersist()
     return cents
 
 
-def _lloyd_rounds(spark, vecs, cents, dim, iters, _collect_audit):
+def _lloyd_rounds(spark, vecs, cents, dim, iters, loop_parts, _collect_audit):
     from pyspark.sql.types import IntegerType
 
     for _ in range(iters):
@@ -438,9 +432,12 @@ def _lloyd_rounds(spark, vecs, cents, dim, iters, _collect_audit):
             # the collect: driver traffic is ≤ n_lists rows per Lloyd iteration
             # instead of n_lists × dim (the r5 verdict's scale-killer — at the
             # 1e5-list × 768-dim design point that was ~10^8 driver rows/iter).
+            # One explicit list_id exchange at the loop width serves both
+            # aggregates (hash(list_id) clusters (list_id, pos) too).
             per_list = (
                 vecs.select(assign(F.col("vec")).alias("list_id"),
                             F.posexplode(F.col("vec")).alias("pos", "x"))
+                .repartition(loop_parts, "list_id")
                 .groupBy("list_id", "pos")
                 .agg(F.avg("x").alias("mean"))
                 .groupBy("list_id")

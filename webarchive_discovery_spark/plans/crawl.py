@@ -21,7 +21,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
@@ -200,6 +200,8 @@ _LOG_NULL_TYPES = {
     "crawl_delay_ms": "int", "fetch_seq": "long", "image_id": "string",
     "digest": "string", "caption": "string",
 }
+# Every status a crawl-log row can carry.
+_STATUSES = ("fetched", "fetch_error", "dup_seen", "robots_denied", "delayed")
 
 
 def _log_select(df: DataFrame, status: Column | None = None) -> DataFrame:
@@ -223,10 +225,9 @@ def _epoch_plan(
     bloom_probe,  # Callable[[DataFrame], DataFrame] adding ``maybe_seen``, or None
     host_rank: DataFrame | None = None,  # (host, host_affinity) broadcast dim
     sitemap_rank: DataFrame | None = None,  # (url_hash, sitemap_affinity) broadcast dim
-) -> tuple[DataFrame, DataFrame]:
-    """One epoch: returns (crawl_log, fetched) — crawl_log has one row per
-    candidate URL with status ∈ {fetched, dup_seen, robots_denied, delayed,
-    fetch_error}; ``fetched`` carries the validated record joins."""
+) -> DataFrame:
+    """One epoch's crawl log: one row per candidate URL with status ∈
+    :data:`_STATUSES`."""
     if "retries" not in raw_frontier.columns:
         raw_frontier = raw_frontier.withColumn("retries", F.lit(0))
     fr = fop.canonicalize_frontier(raw_frontier, "url")
@@ -317,8 +318,7 @@ def _epoch_plan(
     )
     other_log = _log_select(ordered.filter(F.col("status") != "fetched"))
     dup_log = _log_select(dup, F.lit("dup_seen"))
-    crawl_log = fetch_log.unionByName(other_log).unionByName(dup_log)
-    return crawl_log, fetch_log.filter(F.col("status") == "fetched")
+    return fetch_log.unionByName(other_log).unionByName(dup_log)
 
 
 def _membership(history: DataFrame, epoch: int, cfg: CrawlConfig) -> DataFrame:
@@ -483,31 +483,27 @@ def run_crawl(
                 def bloom_probe(df, _b=bloom):
                     return bloom_negative_filter(df, "url_hash", _b)
 
-        mark = fop.staging_mark()
-        crawl_log, fetched = _epoch_plan(
+        crawl_log = _epoch_plan(
             spark, frontier_df, seen, robots_rules, records, cfg, bloom_probe,
             host_rank=host_rank, sitemap_rank=sitemap_rank,
         )
         # truncate lineage every epoch: without this the logical plan embeds
         # every prior epoch's full pipeline and grows super-linearly (driver
-        # OOMs on plan trees long before data is a problem)
-        crawl_log = crawl_log.withColumn("epoch", F.lit(epoch)).localCheckpoint()
-        # the epoch is materialized now — reclaim only THIS epoch's tmpfs
-        # staging (scoped via the mark: a concurrent, not-yet-materialized
-        # global_sequence DataFrame elsewhere in the process keeps its dirs)
-        fop.release_staging(mark)
-
-        # per-partition lineage/metrics rows (the reference's Hadoop counters,
-        # WARCIndexerMapper.java:63-65 / Instrument.java)
-        part_metrics = (
-            crawl_log.groupBy(F.spark_partition_id().alias("partition_id"), "status")
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .collect()
+        # OOMs on plan trees long before data is a problem).  The per-epoch
+        # status counts (the reference's Hadoop counters,
+        # WARCIndexerMapper.java:63-65 / Instrument.java) ride this
+        # checkpoint's job as observe() metrics — no job of their own.
+        obs = Observation()
+        crawl_log = (
+            crawl_log.withColumn("epoch", F.lit(epoch))
+            .observe(obs, *[F.count_if(F.col("status") == s).alias(s) for s in _STATUSES])
+            .localCheckpoint()
         )
-        status_counts = {}
-        for r in part_metrics:
-            status_counts[r["status"]] = status_counts.get(r["status"], 0) + r["rows"]
-        metrics.append({"epoch": epoch, "statuses": status_counts, "partitions": len({r['partition_id'] for r in part_metrics})})
+        metrics.append({
+            "epoch": epoch,
+            "statuses": {s: n for s, n in obs.get.items() if n},
+            "partitions": crawl_log.rdd.getNumPartitions(),
+        })
 
         # seen-set delta: everything fetched this epoch (+ retry-exhausted
         # URLs with an ``unfetchable`` sentinel so rediscovered links stop

@@ -6080,7 +6080,7 @@ def checkpoint_time_travel(spark, sf_dir):
     # gate-ephemeral store root on tmpfs when available: the snapshot
     # commits/reads stand in for a distributed store whose bandwidth scales
     # with executors; one shared /tmp disk would cap them (sandbox artifact,
-    # not plan property — same rationale as global_sequence staging)
+    # not plan property)
     _shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
     root = tempfile.mkdtemp(prefix="wads_ckpt_gate_", dir=_shm)
     try:
