@@ -1,10 +1,12 @@
 """Round-6 optimization sidecar bench (bench.py is FROZEN for measurement).
 
-Per query: noop-sink timing (1 warm-up + N trials, min), Spark job/stage
-counts via the status tracker, and `.explain("formatted")` captured to
-plans/r06/<query>_<tag>.txt.  Job/stage counts are the per-round shuffle and
-action audit the optimization guide asks for (guide SS1-SS2): at sf0.1 most
-gate queries are scheduling-bound, so the job count IS the cost model.
+Per query: noop-sink timing (1 warm-up + N trials, min), the warm-up's
+Spark job, stage and task counts read from the status store
+(``perfbench.trace.read_status``, skipped stages excluded), and
+`.explain("formatted")` captured to plans/r06/<query>_<tag>.txt.  Job/stage
+counts are the per-round shuffle and action audit the optimization guide
+asks for (guide SS1-SS2): at sf0.1 most gate queries are scheduling-bound,
+so the job count IS the cost model.
 
 Usage:
   python bench_extra.py [--tag before|after] [--trials 3] [--no-plans] [query ...]
@@ -22,6 +24,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.trace import read_status  # noqa: E402
 from webarchive_discovery_spark.plans import gate_queries  # noqa: E402
 from webarchive_discovery_spark.session import get_spark  # noqa: E402
 
@@ -40,7 +43,6 @@ def main() -> None:
     spark = get_spark("bench-extra")
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
-    tracker = sc.statusTracker()
 
     names = args.queries or HEADLINE
     plans_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "r06")
@@ -56,23 +58,15 @@ def main() -> None:
         sc._jvm.System.gc()
         sc.setJobDescription(name)
 
-        # warm-up, counting jobs/stages for the steady-state plan
-        jobs_before = set(tracker.getJobIdsForGroup(None) or [])
+        # warm-up, counting the jobs, stages and tasks of the steady-state
+        # plan from the status store; skipped stages were never submitted
+        # and are not counted
+        since = time.time()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        # count jobs from the warm-up run via the tracker delta
-        jobs_after = set(tracker.getJobIdsForGroup(None) or [])
-        new_jobs = sorted(jobs_after - jobs_before)
-        n_stages = 0
-        n_tasks = 0
-        for j in new_jobs:
-            info = tracker.getJobInfo(j)
-            if info is None:
-                continue
-            for s in info.stageIds:
-                si = tracker.getStageInfo(s)
-                if si is not None:
-                    n_stages += 1
-                    n_tasks += si.numTasks
+        status = read_status(spark, since)
+        n_jobs = len(status["jobs"])
+        n_stages = len(status["stages"])
+        n_tasks = sum(s["tasks"] for s in status["stages"].values())
 
         trial_secs = []
         build_secs = []
@@ -98,12 +92,12 @@ def main() -> None:
             "sec": best,
             "build_sec": build,
             "trials": trial_secs,
-            "jobs": len(new_jobs),
+            "jobs": n_jobs,
             "stages": n_stages,
             "tasks": n_tasks,
         }
         print(
-            f"{name:36s} {best:7.3f}s (build {build:6.3f}s)  jobs={len(new_jobs):3d} "
+            f"{name:36s} {best:7.3f}s (build {build:6.3f}s)  jobs={n_jobs:3d} "
             f"stages={n_stages:3d} tasks={n_tasks:5d}  trials={trial_secs}",
             flush=True,
         )

@@ -3,22 +3,22 @@ small-scale FPR audit of the parameter math (the 1e10/1e-6 design point is
 parameterized through the same formulas)."""
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from webarchive_discovery_spark.operators.bloom import (
     BloomParams,
-    PartitionedBloom,
     bloom_negative_filter,
     build_bloom,
 )
 
 
-def test_no_false_negatives_and_fpr():
+def test_no_false_negatives_and_fpr(spark):
     params = BloomParams(n_capacity=20_000, fpr=1e-4, num_shards=8)
-    bloom = PartitionedBloom(params)
     rng = np.random.default_rng(3)
     members = rng.integers(-(2**62), 2**62, 20_000, dtype=np.int64)
-    bloom.add_hashes(members)
+    df = spark.createDataFrame(pd.DataFrame({"url_hash": members}))
+    bloom = build_bloom(df, "url_hash", params)
     assert bloom.contains_hashes(members).all()  # no false negatives, ever
 
     probes = rng.integers(-(2**62), 2**62, 200_000, dtype=np.int64)
@@ -26,17 +26,6 @@ def test_no_false_negatives_and_fpr():
     fp = bloom.contains_hashes(probes).mean()
     # allow 5x the design FPR as audit slack at this small m
     assert fp <= 5 * params.fpr, f"observed FPR {fp}"
-
-
-def test_merge_is_union():
-    params = BloomParams(n_capacity=1000, fpr=1e-3, num_shards=4)
-    a, b = PartitionedBloom(params), PartitionedBloom(params)
-    xs = np.arange(100, dtype=np.int64)
-    ys = np.arange(100, 200, dtype=np.int64)
-    a.add_hashes(xs)
-    b.add_hashes(ys)
-    m = a.merge(b)
-    assert m.contains_hashes(xs).all() and m.contains_hashes(ys).all()
 
 
 def test_distributed_build_and_probe(spark):
@@ -138,3 +127,20 @@ def test_shard_scaffold_declares_eval_type(spark):
         B.bloom_negative_filter_sharded(hashes, "url_hash", shards, bp)
         shards = C.build_cuckoo_shards(hashes, "url_hash", cp)
         C.cuckoo_negative_filter_sharded(hashes, "url_hash", shards, cp)
+
+
+def test_builds_skip_null_hashes(spark):
+    """A NULL hash in the seen-set is never seen by the exact join, so the
+    shared shard build drops it: the broadcast Bloom build and the cuckoo
+    build both succeed and keep every non-NULL member."""
+    from webarchive_discovery_spark.operators import cuckoo as C
+
+    seen = spark.createDataFrame([(11,), (None,), (-7,)], "url_hash long")
+    members = np.array([11, -7], dtype=np.int64)
+    bloom = build_bloom(seen, "url_hash", BloomParams(100, fpr=1e-3, num_shards=4))
+    assert bloom.contains_hashes(members).all()
+    cparams = C.CuckooParams(100, fpr=1e-3, num_shards=4)
+    shards = C.build_cuckoo_shards(seen, "url_hash", cparams)
+    probe = spark.createDataFrame([(11,), (-7,)], "url_hash long")
+    assert all(r["maybe_seen"] for r in
+               C.cuckoo_negative_filter_sharded(probe, "url_hash", shards, cparams).collect())

@@ -182,8 +182,8 @@ def test_checkpoint_resume_from_compacted_snapshot_bit_exact(spark, world, tmp_p
 
 def test_sharded_bloom_tier_at_design_capacity(spark, world, monkeypatch):
     """At a large configured Bloom capacity the crawl loop must auto-select
-    the fully-distributed sharded build/probe: the driver-merge tier
-    (``build_bloom``, which treeReduces the whole bit matrix to the driver)
+    the fully-distributed sharded build/probe: the broadcast tier
+    (``build_bloom``, which collects the whole bit matrix to the driver)
     is monkeypatched to fail, capacity is the 1e10 design point (full matrix
     ≈ 36 GB — far past the 4 GiB broadcast limit), and the crawl
     output must equal the exact-only (no-Bloom) run bit-for-bit, proving the
@@ -191,7 +191,7 @@ def test_sharded_bloom_tier_at_design_capacity(spark, world, monkeypatch):
     import webarchive_discovery_spark.plans.crawl as crawl_mod
 
     def boom(*a, **k):  # the full-matrix tier must never run
-        raise AssertionError("driver-merge build_bloom called on the sharded tier")
+        raise AssertionError("broadcast-tier build_bloom called on the sharded tier")
 
     monkeypatch.setattr(crawl_mod, "build_bloom", boom)
     records, seeds, links, robots = world

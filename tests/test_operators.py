@@ -1189,3 +1189,38 @@ def test_global_sequence_results_need_no_release(spark):
     assert [r["k"] for r in sorted(rows, key=lambda r: r["seq"])] == sorted(
         r["k"] for r in rows)
     assert release_staging() == 0  # a documented no-op
+
+
+def test_url_seen_split_is_exact(spark):
+    """``url_seen_split`` yields the exact anti-join and semi-join sets
+    with no prefilter, with a Bloom probe (high FPR, so false positives
+    must be verified away), with a cuckoo probe and with a probe that
+    calls every row a maybe."""
+    from webarchive_discovery_spark.operators.bloom import (
+        BloomParams, bloom_negative_filter, build_bloom)
+    from webarchive_discovery_spark.operators.cuckoo import (
+        CuckooParams, build_cuckoo_shards, cuckoo_negative_filter_sharded)
+    from webarchive_discovery_spark.operators.frontier import url_seen_split
+
+    df = spark.range(3_000).select("id", F.xxhash64("id").alias("url_hash"))
+    # every third id of the frontier, plus hashes the frontier never holds
+    seen_ids = [i for i in range(3_000) if i % 3 == 0] + list(range(10_000, 10_200))
+    seen = spark.createDataFrame([(i,) for i in seen_ids], "id long").select(
+        F.xxhash64("id").alias("url_hash"))
+    want_dup = {i for i in range(3_000) if i % 3 == 0}
+    want_new = set(range(3_000)) - want_dup
+
+    bloom = build_bloom(seen, "url_hash", BloomParams(1_000, fpr=0.2, num_shards=4))
+    cparams = CuckooParams(2_000, fpr=1e-3, num_shards=4)
+    cshards = build_cuckoo_shards(seen, "url_hash", cparams)
+    prefilters = {
+        "exact": None,
+        "bloom": lambda d: bloom_negative_filter(d, "url_hash", bloom),
+        "cuckoo": lambda d: cuckoo_negative_filter_sharded(d, "url_hash", cshards, cparams),
+        "all_positive": lambda d: d.withColumn("maybe_seen", F.lit(True)),
+    }
+    for name, prefilter in prefilters.items():
+        new, dup = url_seen_split(df, seen, prefilter)
+        assert set(new.columns) == set(dup.columns) == set(df.columns), name
+        assert {r["id"] for r in new.collect()} == want_new, name
+        assert {r["id"] for r in dup.collect()} == want_dup, name

@@ -159,3 +159,18 @@ def test_ivf_untrained_deterministic_and_subset_of_probed(spark, emb):
     fs = {(r.query_id, r.rank, r.neighbor_id) for r in full.collect()}
     es = {(r.query_id, r.rank, r.neighbor_id) for r in exact.collect()}
     assert fs == es
+
+
+def test_grouped_map_kernels_declare_eval_type(spark):
+    """The grouped-map kernels of the blocked near-dup path and of
+    SemDeDup's within-cluster pairs carry full type hints, so building
+    either plan emits no "Cannot infer the eval type" UserWarning."""
+    import warnings
+
+    rows = [(i, [float(i % 3 == d) + 0.01 * i for d in range(3)]) for i in range(12)]
+    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    cents = np.eye(3)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        similarity.cosine_near_dup_pairs(vecs, threshold=0.9, n_blocks=2)
+        similarity.semantic_dedup(vecs, cents, threshold=0.9)

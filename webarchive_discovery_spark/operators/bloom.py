@@ -8,16 +8,18 @@ an anti-join — so correctness never depends on the FPR, only shuffle volume
 does.  This generalizes the reference's dedup-by-digest URL-seen semantics
 (``MDXReduplicatingReducer.java:72-152``, ``PersistLogMapper.java:117-143``).
 
-Two tiers.  Broadcast (``build_bloom`` / ``bloom_negative_filter``): each
-Spark partition builds a partial bit matrix, the partials are OR-merged on
-the driver and broadcast — right while the whole matrix fits in memory.
-Sharded (``build_bloom_shards`` / ``bloom_negative_filter_sharded``): shard
-id = ``url_hash mod num_shards``, one task builds one shard's bit array and
-the probe cogroups rows with their shard, so the full matrix never exists in
-one process.  The sharded scaffold (``build_shards`` / ``probe_shards``) is
-shared with the cuckoo filter (``operators.cuckoo``); each family supplies
-only its per-shard build and probe kernels.  Deletion (recrawl expiry) is
-the cuckoo filter's job (``CuckooFilter.remove_hashes``).
+One build, two tiers.  Every tier builds through the shard scaffold
+(``build_shards``): shard id = ``url_hash mod num_shards``, one task builds
+one shard's bit array.  Broadcast (``build_bloom`` /
+``bloom_negative_filter``): the shards are collected into the driver's bit
+matrix and broadcast — right while the whole matrix fits in memory.  Sharded
+(``build_bloom_shards`` / ``bloom_negative_filter_sharded``): the probe
+cogroups rows with their shard (``probe_shards``), so the full matrix never
+exists in one process.  The scaffold is shared with the cuckoo filter
+(``operators.cuckoo``); each family supplies only its per-shard kernels.
+``frontier.url_seen_split`` verifies the positives of any of them.
+Deletion (recrawl expiry) is the cuckoo filter's job
+(``CuckooFilter.remove_hashes``).
 
 At the 1e10 design point with FPR 1e-6 the total is m = n·ln(1e-6)/ln(2)² ≈
 28.8 bits/URL → ~36 GB split over ~1024 shards of ~35 MB — each executor
@@ -74,17 +76,20 @@ class BloomParams:
         return max(1, round((self.m_bits_per_shard * self.num_shards / self.n_capacity) * math.log(2)))
 
 
-def _probe_indexes(h: np.ndarray, k: int, m: int) -> np.ndarray:
-    """Kirsch–Mitzenmacher: index_i = (h1 + i*h2) mod m from one 64-bit hash."""
-    h = h.astype(np.uint64)
+def _shard_probe_masks(hashes: np.ndarray, params: BloomParams):
+    """(word index, bit mask) of each of the k probes within a hash's shard.
+    Kirsch–Mitzenmacher: index_i = (h1 + i*h2) mod m from one 64-bit hash."""
+    h = hashes.astype(np.uint64)
     h1 = h & np.uint64(0xFFFFFFFF)
     h2 = (h >> np.uint64(32)) | np.uint64(1)  # odd-ish second hash
-    i = np.arange(k, dtype=np.uint64)[:, None]
-    return ((h1[None, :] + i * h2[None, :]) % np.uint64(m)).astype(np.int64)
+    i = np.arange(params.k_hashes, dtype=np.uint64)[:, None]
+    idx = ((h1[None, :] + i * h2[None, :]) % np.uint64(params.m_bits_per_shard)).astype(np.int64)
+    return idx >> 6, np.uint64(1) << (idx & 63).astype(np.uint64)
 
 
 class PartitionedBloom:
-    """num_shards × (m_bits/64) uint64 bit matrix with set/contains kernels."""
+    """num_shards × (m_bits/64) uint64 bit matrix (row i = shard i) with the
+    broadcast probe's contains kernel."""
 
     def __init__(self, params: BloomParams, bits: np.ndarray | None = None):
         self.params = params
@@ -95,56 +100,27 @@ class PartitionedBloom:
             else np.zeros((params.num_shards, words), dtype=np.uint64)
         )
 
-    def add_hashes(self, hashes: np.ndarray) -> None:
-        p = self.params
-        h = hashes.astype(np.uint64)
-        shard = (h % np.uint64(p.num_shards)).astype(np.int64)
-        idx = _probe_indexes(h, p.k_hashes, p.m_bits_per_shard)  # (k, n)
-        word = idx >> 6
-        mask = np.uint64(1) << (idx & 63).astype(np.uint64)
-        for ki in range(p.k_hashes):
-            np.bitwise_or.at(self.bits, (shard, word[ki]), mask[ki])
-
     def contains_hashes(self, hashes: np.ndarray) -> np.ndarray:
         p = self.params
         h = hashes.astype(np.uint64)
         shard = (h % np.uint64(p.num_shards)).astype(np.int64)
-        idx = _probe_indexes(h, p.k_hashes, p.m_bits_per_shard)
-        word = idx >> 6
-        mask = np.uint64(1) << (idx & 63).astype(np.uint64)
+        word, mask = _shard_probe_masks(h, p)
         out = np.ones(len(h), dtype=bool)
         for ki in range(p.k_hashes):
             out &= (self.bits[shard, word[ki]] & mask[ki]) != 0
         return out
 
-    def merge(self, other: "PartitionedBloom") -> "PartitionedBloom":
-        return PartitionedBloom(self.params, self.bits | other.bits)
-
 
 def build_bloom(df: DataFrame, hash_col: str, params: BloomParams) -> PartitionedBloom:
-    """Broadcast-tier build: each partition produces a partial bit matrix
-    (RDD ``mapPartitions`` — imperative per-partition state is genuinely
-    needed here), OR-reduced treewise to the driver.  Right when the FULL
-    matrix fits driver+executor memory (≲1e9 URLs); beyond that use
-    :func:`build_bloom_shards` / :func:`bloom_negative_filter_sharded`,
-    which never materialize more than one shard per task."""
-    words = params.m_bits_per_shard // 64
-    shards = params.num_shards
-
-    def partial(it):
-        bloom = PartitionedBloom(params)
-        for pdf in it:
-            vals = pdf[hash_col].to_numpy(dtype=np.int64, na_value=0)
-            bloom.add_hashes(vals)
-        yield pd.DataFrame({"bits": [bloom.bits.tobytes()]})
-
-    partials = (
-        df.select(hash_col)
-        .mapInPandas(partial, "bits binary")
-        .rdd.map(lambda r: np.frombuffer(r["bits"], dtype=np.uint64).reshape(shards, words))
-        .treeReduce(lambda a, b: a | b)
-    )
-    return PartitionedBloom(params, partials)
+    """Broadcast-tier build: the sharded build (:func:`build_bloom_shards`)
+    collected into the driver's matrix, one row per non-empty shard.  Right
+    when the FULL matrix fits driver+executor memory (≲1e9 URLs); beyond
+    that probe the shards where they are built
+    (:func:`bloom_negative_filter_sharded`)."""
+    bloom = PartitionedBloom(params)
+    for row in build_bloom_shards(df, hash_col, params).collect():
+        bloom.bits[row["shard_id"]] = np.frombuffer(row["bits"], dtype=np.uint64)
+    return bloom
 
 
 def bloom_negative_filter(
@@ -162,12 +138,6 @@ def bloom_negative_filter(
         return pd.Series(local.contains_hashes(h.to_numpy(dtype=np.int64)))
 
     return spark_df.withColumn("maybe_seen", probe(F.col(hash_col)))
-
-
-def _shard_probe_masks(hashes: np.ndarray, params: BloomParams):
-    """(word index, bit mask) per probe for hashes WITHIN one shard."""
-    idx = _probe_indexes(hashes.astype(np.uint64), params.k_hashes, params.m_bits_per_shard)
-    return idx >> 6, np.uint64(1) << (idx & 63).astype(np.uint64)
 
 
 def _shard_of(hash_col: str, num_shards: int) -> Column:
@@ -199,14 +169,15 @@ def build_shards(
     ``kernel(shard_id, int64 hashes) -> bytes`` over its whole shard in
     isolation (no partial merge, no driver materialization).  Returns
     ``(shard_id int, <out_col> binary)``; shards that received no hash have
-    no row."""
+    no row.  NULL hashes are dropped: an exact join never finds them seen."""
 
     def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         shard_id = int(key[0])
         h = pdf[hash_col].to_numpy(dtype=np.int64, na_value=0)
         return pd.DataFrame({"shard_id": [shard_id], out_col: [kernel(shard_id, h)]})
 
-    keyed = df.select(hash_col).withColumn("_shard", _shard_of(hash_col, num_shards))
+    keyed = df.select(hash_col).where(F.col(hash_col).isNotNull()).withColumn(
+        "_shard", _shard_of(hash_col, num_shards))
     return _grouped_by_shard(keyed, "_shard", num_shards).applyInPandas(
         build, f"shard_id int, {out_col} binary"
     )

@@ -20,11 +20,11 @@ Design notes for 100 TB:
 
 from __future__ import annotations
 
-from functools import lru_cache
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..session import column_memo
 
 __all__ = [
     "exact_dedup",
@@ -109,7 +109,7 @@ def minhash_signature(sh: Column, num_hashes: int = 8) -> list[Column]:
     ]
 
 
-@lru_cache(maxsize=32)
+@column_memo(maxsize=32)
 def _minhash_band_exprs(num_hashes: int, bands: int, hash_fn: str):
     """Memoized signature-aggregate and band-explode Columns for
     :func:`minhash_lsh_candidates` — ~300 py4j round trips per build
@@ -307,7 +307,7 @@ def simhash16(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return g.select(F.col(id_col), total)
 
 
-@lru_cache(maxsize=64)
+@column_memo(maxsize=64)
 def _simhash16_exprs(text_col: str):
     # expression-tree memo (r6): ~400 py4j round trips per build otherwise —
     # see the note in operators/textstats.py; unresolved Columns bind by name

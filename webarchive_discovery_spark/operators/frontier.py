@@ -1,4 +1,4 @@
-"""Crawl-frontier operators: canonicalization projection, URL-seen anti-join,
+"""Crawl-frontier operators: canonicalization projection, the URL-seen split,
 robots prefix matching, priority scoring, and the fetch scheduler — the one
 politeness-slot → status → priority-band → global-order policy that the crawl
 loop (``plans/crawl.py``), the ``frontier_fetch_order`` gate and the frontier
@@ -10,7 +10,7 @@ re-expression of the reference's crawl semantics —
 - URL canonicalization / SURT keys: ``Normalisation.java:136-275``,
   ``WARCIndexer.java:593-639``
 - URL-seen / dedup: ``MDXReduplicatingReducer.java:72-152``,
-  ``PersistLogMapper.java:117-143``
+  ``PersistLogMapper.java:117-143`` — :func:`url_seen_split`
 - robots / exclusion prefix sets: ``WARCIndexer.java:888-908``,
   ``Annotator.java:217-225``, robots accounting ``HostsReportMapper.java:49-66``
 - priority inputs (inlink counts): ``OutlinkExtractorMapper.java:57-87``
@@ -37,7 +37,7 @@ from ..functions.udfs import canonical_struct_udf
 
 __all__ = [
     "canonicalize_frontier",
-    "url_seen_anti_join",
+    "url_seen_split",
     "robots_match",
     "priority_score",
     "politeness_status",
@@ -107,10 +107,22 @@ def canonicalize_frontier(df: DataFrame, url_col: str = "url") -> DataFrame:
     return out.withColumn("url_hash", F.xxhash64(F.col("url_norm")))
 
 
-def url_seen_anti_join(frontier: DataFrame, seen: DataFrame, key: str = "url_hash") -> DataFrame:
-    """Drop URLs already in the seen-set (exact; the Bloom prefilter in
-    :mod:`.bloom` only reduces the rows reaching this join)."""
-    return frontier.join(seen.select(key).distinct(), key, "left_anti")
+def url_seen_split(
+    df: DataFrame, seen: DataFrame, prefilter=None, key: str = "url_hash"
+) -> tuple[DataFrame, DataFrame]:
+    """``(new, dup)``: the rows of ``df`` whose ``key`` is not / is in
+    ``seen``.  A ``prefilter`` (a Bloom or cuckoo probe adding
+    ``maybe_seen``) only cuts the rows that meet ``seen``: its negatives are
+    new and only its positives are verified exactly, so the FPR never
+    changes the result."""
+    seen = seen.select(key)
+    if prefilter is None:
+        return df.join(seen, key, "left_anti"), df.join(seen, key, "left_semi")
+    probed = prefilter(df)
+    maybe = probed.filter(F.col("maybe_seen"))
+    fresh = probed.filter(~F.col("maybe_seen"))
+    new = fresh.unionByName(maybe.join(seen, key, "left_anti"))
+    return new.drop("maybe_seen"), maybe.join(seen, key, "left_semi").drop("maybe_seen")
 
 
 def robots_match(

@@ -200,7 +200,7 @@ def cosine_near_dup_pairs(
         F.col("_pair.pa").alias("_pa"), F.col("_pair.pb").alias("_pb"),
     )
 
-    def verify(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def verify(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         a_blk, b_blk = int(key[0]), int(key[1])
         ids = pdf["_id"].to_numpy()
         mat = _l2_normalize(np.vstack(pdf["_vec"].to_numpy()).astype(np.float64))
@@ -554,7 +554,7 @@ def _within_cluster_pairs(
         [StructField("id_a", id_field.dataType), StructField("id_b", id_field.dataType)]
     )
 
-    def pairs_in_cluster(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def pairs_in_cluster(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf["_id"].to_numpy()
         mat = _l2_normalize(np.vstack(pdf["_vec"].to_numpy()).astype(np.float64))
         scores = mat @ mat.T
@@ -594,7 +594,7 @@ def _within_cluster_pairs(
         F.col("_pair.pa").alias("_pa"), F.col("_pair.pb").alias("_pb"),
     )
 
-    def hot_pairs_in_blocks(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def hot_pairs_in_blocks(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         a_blk, b_blk = int(key[1]), int(key[2])
         ids = pdf["_id"].to_numpy()
         mat = _l2_normalize(np.vstack(pdf["_vec"].to_numpy()).astype(np.float64))

@@ -12,11 +12,11 @@ optional ``model=`` path, which routes a registered real model (see
 
 from __future__ import annotations
 
-from functools import lru_cache
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..session import column_memo
 
 # Expression-tree memoization (r6): building a big Column ladder costs one
 # py4j round trip (~0.2 ms) per functions.* call — profiled at 0.3-0.6 s of
@@ -24,7 +24,8 @@ from pyspark.sql import functions as F
 # every query build.  Unresolved Column objects are immutable and bind to
 # attributes by NAME at analysis, so trees keyed by (column names, rule
 # parameters) are safely reusable across DataFrames and queries within one
-# JVM gateway; the caches below hold a handful of tiny JVM refs.
+# JVM gateway — ``session.column_memo`` keys each cache by the live gateway,
+# so a restarted one rebuilds; the caches hold a handful of tiny JVM refs.
 
 __all__ = [
     "lang_id",
@@ -205,7 +206,7 @@ def lang_id(
     )
 
 
-@lru_cache(maxsize=8)
+@column_memo(maxsize=8)
 def _langid_exprs(text_col: str, langs_key):
     def lit_sql(s: str) -> str:
         return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
@@ -466,7 +467,7 @@ def gopher_quality_filter(
     return df.select("*", *flag_cols).withColumn("gopher_pass", gate)
 
 
-@lru_cache(maxsize=64)
+@column_memo(maxsize=64)
 def _gopher_exprs(
     text_col: str,
     min_words: int,
@@ -556,7 +557,7 @@ def repetition_stats(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-@lru_cache(maxsize=64)
+@column_memo(maxsize=64)
 def _repetition_exprs(text_col: str):
     text = F.col(text_col)
     lines = F.filter(F.split(text, r"\n"), lambda l: F.trim(l) != "")
@@ -634,7 +635,7 @@ def c4_line_filter(
     )
 
 
-@lru_cache(maxsize=64)
+@column_memo(maxsize=64)
 def _c4_exprs(text_col: str, min_words_per_line: int, out_col: str):
     text = F.col(text_col)
     lines = F.filter(F.split(text, r"\n"), lambda l: F.trim(l) != "")

@@ -113,8 +113,9 @@ class CrawlConfig:
 
 
 # Above this configured bit-matrix size the Bloom tier switches from the
-# driver-merged broadcast build to the sharded build + cogroup probe, which
-# never holds more than one shard in any process (the 1e10 design point).
+# broadcast matrix (the shard build collected on the driver) to the cogroup
+# probe of the shards in place, which never holds more than one shard in any
+# process (the 1e10 design point).
 _BLOOM_BROADCAST_MAX_BYTES = 4 << 30
 
 
@@ -250,18 +251,10 @@ def _epoch_plan(
         F.count(F.lit(1)).alias("inlinks"),
     )
 
-    # URL-seen: Bloom prefilter (negative ⇒ definitely new, skips the join
-    # probe) + exact anti-join for correctness
-    if bloom_probe is not None:
-        dd = bloom_probe(dd)
-        maybe = dd.filter(F.col("maybe_seen"))
-        fresh = dd.filter(~F.col("maybe_seen"))
-        confirmed_new = maybe.join(seen.select("url_hash"), "url_hash", "left_anti")
-        new = fresh.unionByName(confirmed_new).drop("maybe_seen")
-        dup = maybe.join(seen.select("url_hash"), "url_hash", "left_semi").drop("maybe_seen")
-    else:
-        new = dd.join(seen.select("url_hash"), "url_hash", "left_anti")
-        dup = dd.join(seen.select("url_hash"), "url_hash", "left_semi")
+    # URL-seen: the Bloom/cuckoo prefilter (negative ⇒ definitely new, skips
+    # the join probe) + exact verify of its positives, or the exact
+    # anti-/semi-join alone when there is no prefilter
+    new, dup = fop.url_seen_split(dd, seen, bloom_probe)
 
     rm = fop.robots_match(new, robots_rules)
     affinity = F.lit(0.0)

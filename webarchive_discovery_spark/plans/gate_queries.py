@@ -1110,8 +1110,8 @@ def url_seen_antijoin(spark, sf_dir):
     fr = frontier.canonicalize_frontier(_frontier_urls(spark, sf_dir), "url").persist()
     dd = _frontier_dedup(spark, sf_dir, fr=fr)
     seen = fr.filter(F.col("event_id") % 7 == 0).select(F.col("url_norm").alias("url_hash"))
-    unseen = frontier.url_seen_anti_join(
-        dd.withColumn("url_hash", F.col("url_norm")), seen, key="url_hash"
+    unseen, _ = frontier.url_seen_split(
+        dd.withColumn("url_hash", F.col("url_norm")), seen
     )
     return unseen.select("url_norm", "first_event", "inlinks")
 
@@ -3743,6 +3743,21 @@ def office_formats_extract(spark, sf_dir):
 # Sharded Bloom seen-set (the 1e10-capable tier) under the correctness gate
 # ===========================================================================
 
+def _seen_probe(ev, seen_mod, buckets, build, probe, params):
+    """The seen-tier gates' one body: new hashes of ``ev`` per ``url_hash %
+    buckets`` against the seen-set ``url_hash % seen_mod == 0``, split with
+    the filter ``build``/``probe`` as prefilter.  The split is exact, so each
+    oracle is the plain set difference."""
+    seen = ev.filter(F.col("url_hash") % seen_mod == 0)
+    shards = build(seen, "url_hash", params)
+    unseen, _ = frontier.url_seen_split(
+        ev, seen, lambda df: probe(df, "url_hash", shards, params)
+    )
+    return unseen.groupBy(
+        (F.col("url_hash") % buckets).alias("bucket")
+    ).agg(F.count(F.lit(1)).alias("n_unseen"))
+
+
 @q(
     "bloom_shard_probe",
     """
@@ -3771,17 +3786,10 @@ def bloom_shard_probe(spark, sf_dir):
     ev = _t(spark, sf_dir, "events").select(
         F.col("event_id").alias("url_hash")
     ).distinct()
-    seen = ev.filter(F.col("url_hash") % 7 == 0)
-    params = B.BloomParams(n_capacity=200_000, fpr=1e-3, num_shards=8)
-    shards = B.build_bloom_shards(seen, "url_hash", params)
-    probed = B.bloom_negative_filter_sharded(ev, "url_hash", shards, params)
-    definite = probed.filter(~F.col("maybe_seen")).select("url_hash")
-    candidates = probed.filter(F.col("maybe_seen")).select("url_hash")
-    verified = candidates.join(seen, "url_hash", "left_anti")
-    unseen = definite.unionByName(verified)
-    return unseen.groupBy(
-        (F.col("url_hash") % 32).alias("bucket")
-    ).agg(F.count(F.lit(1)).alias("n_unseen"))
+    return _seen_probe(
+        ev, 7, 32, B.build_bloom_shards, B.bloom_negative_filter_sharded,
+        B.BloomParams(n_capacity=200_000, fpr=1e-3, num_shards=8),
+    )
 
 
 @q(
@@ -3877,20 +3885,6 @@ def _seen_1m_frontier(spark):
     return spark.range(0, 1_000_000).select(F.col("id").alias("url_hash"))
 
 
-def _seen_probe_1m(spark, build, probe, params):
-    ev = _seen_1m_frontier(spark)
-    seen = ev.filter(F.col("url_hash") % 7 == 0)
-    shards = build(seen, "url_hash", params)
-    probed = probe(ev, "url_hash", shards, params)
-    definite = probed.filter(~F.col("maybe_seen")).select("url_hash")
-    candidates = probed.filter(F.col("maybe_seen")).select("url_hash")
-    verified = candidates.join(seen, "url_hash", "left_anti")
-    unseen = definite.unionByName(verified)
-    return unseen.groupBy(
-        (F.col("url_hash") % 32).alias("bucket")
-    ).agg(F.count(F.lit(1)).alias("n_unseen"))
-
-
 @q("bloom_probe_1m", _SEEN_1M_SQL)
 def bloom_probe_1m(spark, sf_dir):
     """Bloom seen-tier at frontier scale: 1M hashes through the sharded
@@ -3899,8 +3893,9 @@ def bloom_probe_1m(spark, sf_dir):
     exact)."""
     from ..operators import bloom as B
 
-    return _seen_probe_1m(
-        spark, B.build_bloom_shards, B.bloom_negative_filter_sharded,
+    return _seen_probe(
+        _seen_1m_frontier(spark), 7, 32,
+        B.build_bloom_shards, B.bloom_negative_filter_sharded,
         B.BloomParams(n_capacity=1_500_000, fpr=1e-4, num_shards=32),
     )
 
@@ -3912,8 +3907,9 @@ def cuckoo_probe_1m(spark, sf_dir):
     two tiers' costs stay directly comparable in the bench."""
     from ..operators import cuckoo as C
 
-    return _seen_probe_1m(
-        spark, C.build_cuckoo_shards, C.cuckoo_negative_filter_sharded,
+    return _seen_probe(
+        _seen_1m_frontier(spark), 7, 32,
+        C.build_cuckoo_shards, C.cuckoo_negative_filter_sharded,
         C.CuckooParams(n_capacity=1_500_000, fpr=1e-4, num_shards=32),
     )
 
@@ -5181,17 +5177,10 @@ def cuckoo_shard_probe(spark, sf_dir):
     ev = _t(spark, sf_dir, "events").select(
         F.col("event_id").alias("url_hash")
     ).distinct()
-    seen = ev.filter(F.col("url_hash") % 5 == 0)
-    params = C.CuckooParams(n_capacity=200_000, fpr=1e-4, num_shards=8)
-    shards = C.build_cuckoo_shards(seen, "url_hash", params)
-    probed = C.cuckoo_negative_filter_sharded(ev, "url_hash", shards, params)
-    definite = probed.filter(~F.col("maybe_seen")).select("url_hash")
-    candidates = probed.filter(F.col("maybe_seen")).select("url_hash")
-    verified = candidates.join(seen, "url_hash", "left_anti")
-    unseen = definite.unionByName(verified)
-    return unseen.groupBy(
-        (F.col("url_hash") % 16).alias("bucket")
-    ).agg(F.count(F.lit(1)).alias("n_unseen"))
+    return _seen_probe(
+        ev, 5, 16, C.build_cuckoo_shards, C.cuckoo_negative_filter_sharded,
+        C.CuckooParams(n_capacity=200_000, fpr=1e-4, num_shards=8),
+    )
 
 
 # ===========================================================================

@@ -21,8 +21,6 @@ surface (faceting columns) is complete and stable.
 
 from __future__ import annotations
 
-from functools import lru_cache
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -46,6 +44,7 @@ from .functions.udfs import (
     resolve_relative_udf,
 )
 from .operators.record_filters import url_type_expr
+from .session import column_memo
 
 __all__ = [
     "CAPTURE_SCHEMA",
@@ -300,7 +299,7 @@ def extract_capture(
     return base.select(*E["cols"])
 
 
-@lru_cache(maxsize=32)
+@column_memo(maxsize=32)
 def _capture_exprs(
     with_links: bool,
     with_metadata: bool,

@@ -9,10 +9,30 @@ on a real cluster set ``spark.sql.shuffle.partitions`` ~ 2-3× total cores via
 
 from __future__ import annotations
 
+import functools
 import os
+import threading
 from contextlib import contextmanager
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+
+def column_memo(maxsize: int):
+    """``lru_cache`` for builders of Column trees, keyed also by the live
+    py4j gateway: a Column holds JVM ids of the gateway it was built on, and
+    a restarted gateway must not be handed them."""
+
+    def decorate(fn):
+        cached = functools.lru_cache(maxsize)(lambda _gw, *a, **k: fn(*a, **k))
+        return functools.wraps(fn)(lambda *a, **k: cached(SparkContext._gateway, *a, **k))
+
+    return decorate
+
+
+# id(session) -> [open static_plans scopes, AQE value the first one read]
+_STATIC_SCOPES: dict[int, list] = {}
+_STATIC_LOCK = threading.Lock()
 
 
 @contextmanager
@@ -26,13 +46,27 @@ def static_plans(spark: SparkSession):
     round shape is fixed and whose key distributions are bounded by
     construction (capped band buckets, <=`buckets` model keys, n_lists x dim
     aggregate keys); everything else keeps the session's adaptive planning,
-    including AQE skew-join handling."""
-    was = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    including AQE skew-join handling.
+
+    Scopes on one session may overlap (concurrent queries): AQE stays off
+    while any of them is open, and the last one to close restores the value
+    the first one read."""
+    key = id(spark)
+    with _STATIC_LOCK:
+        scope = _STATIC_SCOPES.get(key)
+        if scope is None:
+            scope = _STATIC_SCOPES[key] = [
+                0, spark.conf.get("spark.sql.adaptive.enabled", "true")]
+            spark.conf.set("spark.sql.adaptive.enabled", "false")
+        scope[0] += 1
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", was)
+        with _STATIC_LOCK:
+            scope[0] -= 1
+            if scope[0] == 0:
+                del _STATIC_SCOPES[key]
+                spark.conf.set("spark.sql.adaptive.enabled", scope[1])
 
 
 def get_spark(
