@@ -144,3 +144,67 @@ def test_builds_skip_null_hashes(spark):
     probe = spark.createDataFrame([(11,), (-7,)], "url_hash long")
     assert all(r["maybe_seen"] for r in
                C.cuckoo_negative_filter_sharded(probe, "url_hash", shards, cparams).collect())
+
+
+def test_seen_filters_sized_from_the_membership_set():
+    """``sized_params`` (pure numpy, no Spark): FPR 1e-6 and capacity n at
+    every seen-set size, the fewest power-of-two shards ≥ the parallelism
+    that keep a shard within the byte budget, the broadcast Bloom tier up
+    to 1e9 URLs and the sharded tier at the 1e10 design point; a Bloom sized
+    for its members holds the FPR bound, and a sized cuckoo drops no key on
+    either side of a bucket boundary."""
+    from webarchive_discovery_spark.operators import cuckoo as C
+    from webarchive_discovery_spark.operators.bloom import (
+        SHARD_MAX_BYTES,
+        PartitionedBloom,
+        shard_bits,
+        sized_params,
+    )
+    from webarchive_discovery_spark.plans.crawl import _BLOOM_BROADCAST_MAX_BYTES
+
+    assert _BLOOM_BROADCAST_MAX_BYTES == 4 << 30
+    for n in (1, 300, 10**6, 10**9, 10**10):
+        for family in (BloomParams, C.CuckooParams):
+            p = sized_params(family, n, 4)
+            assert (p.n_capacity, p.fpr) == (n, 1e-6)
+            assert p.num_shards >= 4 and p.num_shards & (p.num_shards - 1) == 0
+            assert p.shard_bytes <= SHARD_MAX_BYTES
+            assert p.num_shards == 4 or (
+                family(n, 1e-6, p.num_shards // 2).shard_bytes > SHARD_MAX_BYTES)
+        bp = sized_params(BloomParams, n, 4)
+        total = bp.shard_bytes * bp.num_shards
+        assert (total <= _BLOOM_BROADCAST_MAX_BYTES) == (n <= 10**9), (n, total)
+    design = sized_params(BloomParams, 10**10, 4)
+    assert design.num_shards == 1024 and 35e6 <= design.shard_bytes < 36e6  # ~35 MB
+
+    rng = np.random.default_rng(5)
+    members = rng.integers(-(2**62), 2**62, 20_000, dtype=np.int64)
+    params = sized_params(BloomParams, len(members), 4)
+    shard_of = members.astype(np.uint64) % np.uint64(params.num_shards)
+    bloom = PartitionedBloom(params, np.stack([
+        shard_bits(members[shard_of == s], params) for s in range(params.num_shards)
+    ]))
+    assert bloom.contains_hashes(members).all()
+    non = np.setdiff1d(rng.integers(-(2**62), 2**62, 1_000_000, dtype=np.int64), members)
+    fpr = bloom.contains_hashes(non).mean()
+    assert fpr <= 5e-6, fpr
+
+    def buckets(n):
+        return sized_params(C.CuckooParams, n, 4).num_buckets_per_shard
+
+    # 30 key sets at 128 buckets: the (kicks + fp) mod b eviction victim
+    # walked a closed cycle there and dropped keys for seed 25
+    for boundary_buckets, n_seeds in ((16, 30), (128, 30), (4096, 3)):
+        lo, hi = 1, 1 << 20  # last n sized to boundary_buckets per shard
+        while hi - lo > 1:
+            mid = (lo + hi) // 2
+            lo, hi = (mid, hi) if buckets(mid) <= boundary_buckets else (lo, mid)
+        for n in (lo, lo + 1):
+            params = sized_params(C.CuckooParams, n, 4)
+            for seed in range(n_seeds):
+                keys = np.random.default_rng(seed).integers(
+                    -(2**63), 2**63 - 1, n, dtype=np.int64)
+                shard_of = keys.astype(np.uint64) % np.uint64(params.num_shards)
+                dropped = sum(C.CuckooFilter(params).add_hashes(keys[shard_of == s])
+                              for s in range(params.num_shards))
+                assert dropped == 0, (n, seed, dropped)

@@ -33,15 +33,28 @@ def world(spark):
 def _run(spark, world, ckdir=None, resume=False, epochs=3):
     records, seeds, links, robots = world
     cfg = CrawlConfig(
-        epochs=epochs, host_budget=50, checkpoint_dir=ckdir,
-        bloom_capacity=100_000, bloom_fpr=1e-4, bloom_shards=8,
-        num_partitions=4,
+        epochs=epochs, host_budget=50, checkpoint_dir=ckdir, num_partitions=4,
     )
     return run_crawl(spark, records, seeds, links, robots, cfg, resume=resume)
 
 
-def test_crawl_epochs_and_statuses(spark, world):
+def test_crawl_epochs_and_statuses(spark, world, monkeypatch):
+    import webarchive_discovery_spark.plans.crawl as crawl_mod
+
+    # every epoch's Bloom is sized from the membership set it is built from
+    built, build_bloom = [], crawl_mod.build_bloom
+
+    def capture(seen, hash_col, params):
+        bloom = build_bloom(seen, hash_col, params)
+        built.append((params.n_capacity, seen.count(), bloom.bits.nbytes))
+        return bloom
+
+    monkeypatch.setattr(crawl_mod, "build_bloom", capture)
     result = _run(spark, world)
+    assert len(built) == 2  # epoch 0 has nothing seen and builds no filter
+    for n_capacity, n_seen, nbytes in built:
+        assert n_capacity == n_seen
+        assert nbytes < 1024, f"{nbytes} B matrix for {n_seen} members"
     log = result["crawl_log"].persist()
     statuses = {r["status"] for r in log.select("status").distinct().collect()}
     assert "fetched" in statuses
@@ -74,9 +87,17 @@ def test_crawl_epochs_and_statuses(spark, world):
 
 def test_fetch_invariant_pixels_and_captions(spark, world):
     """Per-row invariant: decoded pixels ≈ independently re-derived source
-    pixels (exact for lossless, PSNR ≥ 40 dB for lossy) + caption equality."""
+    pixels (exact for lossless, PSNR ≥ 40 dB for lossy) + caption equality.
+    A seed that java.net.URI rejects gets a status like any other URL."""
     records, seeds, links, robots = world
-    result = _run(spark, world, epochs=1)
+    # a seed java.net.URI rejects ('|' in the query) is crawled, not fatal:
+    # it keeps its host, whose robots rules deny /img/
+    bad_url = "http://host000.example.org/img/search?q=a|b"
+    bad = spark.createDataFrame([(bad_url, 0)], "url string, hops int")
+    result = _run(spark, (records, seeds.unionByName(bad), links, robots), epochs=1)
+    bad_rows = result["crawl_log"].filter(F.col("url_norm") == bad_url).collect()
+    assert [(r["host"], r["status"]) for r in bad_rows] == [
+        ("host000.example.org", "robots_denied")]
     fetched = result["crawl_log"].filter("status = 'fetched'")
     joined = fetched.select("image_id", "caption").join(
         records.select("image_id", "bytes", "fmt", F.col("caption").alias("rec_caption")),
@@ -99,8 +120,7 @@ def test_determinism_across_partitioning(spark, world):
     records, seeds, links, robots = world
     outs = []
     for parts in (2, 7):
-        cfg = CrawlConfig(epochs=2, host_budget=50, num_partitions=parts,
-                          bloom_capacity=100_000, bloom_fpr=1e-4, bloom_shards=8)
+        cfg = CrawlConfig(epochs=2, host_budget=50, num_partitions=parts)
         res = run_crawl(spark, records.repartition(parts), seeds, links, robots, cfg)
         outs.append(
             sorted(
@@ -181,33 +201,29 @@ def test_checkpoint_resume_from_compacted_snapshot_bit_exact(spark, world, tmp_p
 
 
 def test_sharded_bloom_tier_at_design_capacity(spark, world, monkeypatch):
-    """At a large configured Bloom capacity the crawl loop must auto-select
-    the fully-distributed sharded build/probe: the broadcast tier
-    (``build_bloom``, which collects the whole bit matrix to the driver)
-    is monkeypatched to fail, capacity is the 1e10 design point (full matrix
-    ≈ 36 GB — far past the 4 GiB broadcast limit), and the crawl
-    output must equal the exact-only (no-Bloom) run bit-for-bit, proving the
-    Bloom stays a pure prefilter on this tier too."""
+    """When the data-sized matrix exceeds the broadcast limit, the crawl
+    loop must select the fully-distributed sharded build/probe: the limit
+    is monkeypatched to 0 (the 1e10 design point's ~36 GB matrix is what
+    crosses the real 4 GiB limit, see test_bloom's sizing test), the
+    broadcast tier (``build_bloom``, which collects the whole bit matrix to
+    the driver) is monkeypatched to fail, and the crawl output must equal
+    the exact-only (no-prefilter) run bit-for-bit, proving the Bloom stays
+    a pure prefilter on this tier too."""
     import webarchive_discovery_spark.plans.crawl as crawl_mod
 
     def boom(*a, **k):  # the full-matrix tier must never run
         raise AssertionError("broadcast-tier build_bloom called on the sharded tier")
 
     monkeypatch.setattr(crawl_mod, "build_bloom", boom)
+    monkeypatch.setattr(crawl_mod, "_BLOOM_BROADCAST_MAX_BYTES", 0)
     records, seeds, links, robots = world
-    # 65536 shards keep the per-shard array test-sized (~550 KB) while the
-    # TOTAL configured matrix is the real 1e10/FPR-1e-6 design point; shard
-    # count is a free layout parameter (1024 at deploy → ~35 MB shards)
-    cfg = CrawlConfig(
-        epochs=2, host_budget=50, num_partitions=4,
-        bloom_capacity=10_000_000_000, bloom_fpr=1e-6, bloom_shards=65536,
-    )
+    cfg = CrawlConfig(epochs=2, host_budget=50, num_partitions=4)
     res = run_crawl(spark, records, seeds, links, robots, cfg)
     sharded_rows = sorted(
         (r["epoch"], r["url_key"], r["status"], r["fetch_seq"])
         for r in res["crawl_log"].collect()
     )
-    cfg_exact = CrawlConfig(epochs=2, host_budget=50, num_partitions=4, use_bloom=False)
+    cfg_exact = CrawlConfig(epochs=2, host_budget=50, num_partitions=4, seen_filter=None)
     res_exact = run_crawl(spark, records, seeds, links, robots, cfg_exact)
     exact_rows = sorted(
         (r["epoch"], r["url_key"], r["status"], r["fetch_seq"])
@@ -222,8 +238,7 @@ def test_recrawl_expiry_refetches(spark, world):
     authoritative), and within the window it is still dup_seen."""
     records, seeds, links, robots = world
     cfg = CrawlConfig(
-        epochs=5, host_budget=50, bloom_capacity=100_000, bloom_fpr=1e-4,
-        bloom_shards=8, num_partitions=4, recrawl_epochs=2,
+        epochs=5, host_budget=50, num_partitions=4, recrawl_epochs=2,
     )
     log = run_crawl(spark, records, seeds, links, robots, cfg)["crawl_log"]
     per_url = (
@@ -247,8 +262,7 @@ def test_crawl_delay_throttles_budget(spark, world):
     no host fetches more than floor(duration / its crawl_delay_ms) per epoch."""
     records, seeds, links, robots = world
     cfg = CrawlConfig(
-        epochs=2, host_budget=1000, bloom_capacity=100_000, bloom_fpr=1e-4,
-        bloom_shards=8, num_partitions=4, epoch_duration_ms=3000,
+        epochs=2, host_budget=1000, num_partitions=4, epoch_duration_ms=3000,
     )
     log = run_crawl(spark, records, seeds, links, robots, cfg)["crawl_log"]
     fetched_per_host = (
@@ -297,8 +311,7 @@ def test_adaptive_recrawl_backoff(spark, world):
     interval keeps growing instead of resetting)."""
     records, seeds, links, robots = world
     cfg = CrawlConfig(
-        epochs=5, host_budget=50, bloom_capacity=100_000, bloom_fpr=1e-4,
-        bloom_shards=8, num_partitions=4, adaptive_recrawl=True,
+        epochs=5, host_budget=50, num_partitions=4, adaptive_recrawl=True,
     )
     log = run_crawl(spark, records, seeds, links, robots, cfg)["crawl_log"]
     per_url = (
@@ -325,8 +338,7 @@ def test_pagerank_priority_integration(spark, world):
     outs = []
     for parts in (3, 8):
         cfg = CrawlConfig(epochs=2, host_budget=50, num_partitions=parts,
-                          bloom_capacity=100_000, bloom_fpr=1e-4,
-                          bloom_shards=8, use_pagerank=True)
+                          use_pagerank=True)
         res = run_crawl(spark, records.repartition(parts), seeds, links,
                         robots, cfg)
         outs.append(sorted(
@@ -335,14 +347,12 @@ def test_pagerank_priority_integration(spark, world):
         ))
     assert outs[0] == outs[1]
     # the affinity term must actually move priorities vs the no-pagerank run
-    cfg0 = CrawlConfig(epochs=2, host_budget=50, num_partitions=4,
-                       bloom_capacity=100_000, bloom_fpr=1e-4, bloom_shards=8)
+    cfg0 = CrawlConfig(epochs=2, host_budget=50, num_partitions=4)
     base = run_crawl(spark, records, seeds, links, robots, cfg0)
     pr_p = {r["url_key"]: r["priority"] for r in outs and
             run_crawl(spark, records, seeds, links, robots,
                       CrawlConfig(epochs=1, host_budget=50, num_partitions=4,
-                                  bloom_capacity=100_000, bloom_fpr=1e-4,
-                                  bloom_shards=8, use_pagerank=True)
+                                  use_pagerank=True)
                       )["crawl_log"].filter("priority is not null").collect()}
     base_p = {r["url_key"]: r["priority"] for r in
               base["crawl_log"].filter("epoch = 0 and priority is not null").collect()}
@@ -417,7 +427,6 @@ def test_sitemap_discovery_integration(spark, world):
     def run(weight, parts):
         cfg = CrawlConfig(
             epochs=1, host_budget=50, num_partitions=parts,
-            bloom_capacity=100_000, bloom_fpr=1e-4, bloom_shards=8,
             sitemap_weight=weight, sitemap_as_of="2024-02-05",
         )
         return run_crawl(spark, records, seeds, links, robots, cfg,
@@ -458,8 +467,7 @@ def test_fetch_error_retry_backoff(spark, world):
         [("http://host001.example.org/img/999999.html", 0)], "url string, hops int"
     )
     cfg = CrawlConfig(
-        epochs=3, host_budget=50, num_partitions=4, bloom_capacity=100_000,
-        bloom_fpr=1e-4, bloom_shards=8, max_retries=1,
+        epochs=3, host_budget=50, num_partitions=4, max_retries=1,
     )
     res = run_crawl(spark, records, seeds.unionByName(bad), links, robots, cfg)
     log = res["crawl_log"].filter(F.col("url_norm").contains("999999"))
@@ -475,9 +483,7 @@ def test_fetch_error_retry_backoff(spark, world):
     assert len(seen) == 1 and seen[0]["digest"] == "unfetchable"
     # default config unchanged: the bad seed fails once and never retries
     res0 = run_crawl(spark, records, seeds.unionByName(bad), links, robots,
-                     CrawlConfig(epochs=2, host_budget=50, num_partitions=4,
-                                 bloom_capacity=100_000, bloom_fpr=1e-4,
-                                 bloom_shards=8))
+                     CrawlConfig(epochs=2, host_budget=50, num_partitions=4))
     log0 = res0["crawl_log"].filter(F.col("url_norm").contains("999999"))
     assert [r["epoch"] for r in log0.collect()] == [0]
 
@@ -487,8 +493,7 @@ def test_domain_politeness_shares_budget(spark, world):
     budget.  Every synthetic host is *.example.org, so epoch-0 fetches
     collapse to ≤ host_budget total, vs per-host budgets otherwise."""
     records, seeds, links, robots = world
-    base = dict(epochs=1, host_budget=10, num_partitions=4,
-                bloom_capacity=100_000, bloom_fpr=1e-4, bloom_shards=8)
+    base = dict(epochs=1, host_budget=10, num_partitions=4)
     per_host = run_crawl(spark, records, seeds, links, robots,
                          CrawlConfig(**base))
     per_domain = run_crawl(spark, records, seeds, links, robots,
@@ -504,8 +509,7 @@ def test_cuckoo_seen_filter_tier(spark, world):
     loop and produces BIT-IDENTICAL results to the Bloom tier (both are
     prefilters over the same exact seen-set)."""
     records, seeds, links, robots = world
-    base = dict(epochs=3, host_budget=50, num_partitions=4,
-                bloom_capacity=100_000, bloom_fpr=1e-4, bloom_shards=8)
+    base = dict(epochs=3, host_budget=50, num_partitions=4)
     bloom = run_crawl(spark, records, seeds, links, robots, CrawlConfig(**base))
     cuckoo = run_crawl(spark, records, seeds, links, robots,
                        CrawlConfig(**base, seen_filter="cuckoo"))
@@ -542,8 +546,7 @@ def test_retry_counter_survives_link_rediscovery(spark, world):
         "dst_url", F.lit(bad_url)
     )
     cfg = CrawlConfig(
-        epochs=4, host_budget=50, num_partitions=4, bloom_capacity=100_000,
-        bloom_fpr=1e-4, bloom_shards=8, max_retries=2,
+        epochs=4, host_budget=50, num_partitions=4, max_retries=2,
     )
     res = run_crawl(spark, records, seeds.unionByName(bad),
                     links.unionByName(rediscover), robots, cfg)

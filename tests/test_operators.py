@@ -1,6 +1,7 @@
 """Operator-level tests not covered by the DuckDB gate: reservoir
 determinism across partitionings, total-order sort property, salted
-repartition, CDX junk filter, regex extraction counts, URL length cap."""
+repartition, CDX junk filter, regex extraction counts, URL length cap and
+the total canonical projection."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -110,6 +111,40 @@ def test_url_length_cap(spark):
     out = canonicalize_frontier(df).collect()[0]
     assert len(out["url"]) == 2000  # reference cap, WARCIndexer.java:330-331
     assert out["url_norm"].startswith("http://example.org/aaa")
+
+
+def test_canonicalize_frontier_is_total(spark):
+    """``host``/``url_path`` never fail the job: a canonical URL that
+    java.net.URI rejects keeps its real host and path, a malformed authority
+    gets NULLs, and wherever ``parse_url`` accepts the URL both columns
+    equal it (``url_path`` with its NULL → "/" default)."""
+    rejected = {
+        "http://host000.example.org/img/search?q=a|b": ("host000.example.org", "/img/search"),
+        "http://h.example.org/a{x}b": ("h.example.org", "/a{x}b"),
+        'http://h.example.org/a"b': ("h.example.org", '/a"b'),
+        "http://h.example.org/a\tb": ("h.example.org", "/a\tb"),
+        "http://h.example.org:8080/a\x01b": ("h.example.org", "/a\x01b"),
+        "http://[::1/": (None, None),
+        "http://ho|st/x": (None, None),
+    }
+    accepted = [
+        "http://h.example.org/p/1?q=a+b", "http://h.example.org", "http://[::1]:80/x",
+        "http://a_b.example.org/x", "mailto:x@example.org", "foo/bar",
+        "https://www.example.org/x/", "ftp://h.example.org:21/%7Ex#f",
+    ]
+    df = spark.createDataFrame([(u,) for u in [*rejected, *accepted]], "url string")
+    rows = canonicalize_frontier(df).select(
+        "url", "url_norm", "host", "url_path",
+        F.try_parse_url("url_norm", F.lit("HOST")).alias("uri_host"),
+        F.try_parse_url("url_norm", F.lit("PATH")).alias("uri_path"),
+    ).collect()
+    for r in rows:
+        if r["url"] in rejected:
+            assert r["uri_host"] is None and r["uri_path"] is None, r["url_norm"]
+            assert (r["host"], r["url_path"]) == rejected[r["url"]], r["url_norm"]
+        else:
+            assert r["host"] == r["uri_host"], r["url_norm"]
+            assert r["url_path"] == (r["uri_path"] if r["uri_path"] is not None else "/")
 
 
 def test_cdx11_golden_lines(spark):

@@ -273,3 +273,48 @@ def test_temperature_sample_broadcasts_rates(spark):
     assert "BroadcastHashJoin" in plan
     assert "EvalPython" not in plan
     assert "CartesianProduct" not in plan  # totals fold via BroadcastNestedLoop 1-row
+
+
+@pytest.mark.parametrize("op, ladder_input", [
+    ("lang_id", "clean_text"),
+    ("sentiment_bucket", "_sent_padded"),
+    ("gopher_quality_filter", "clean_text"),
+    ("repetition_stats", "clean_text"),
+])
+def test_projection_barriers_survive_optimization(spark, op, ladder_input):
+    """Each textstats projection barrier (an always-true nondeterministic
+    Filter) stays in the optimized plan over a COMPUTED text column (the c4
+    cleaning output, as the training pipeline feeds it), and the ladder's
+    Projects read the text as a plain attribute: no expression of theirs
+    inlines the c4 tree (``array_join``)."""
+    from pyspark.sql import functions as F
+
+    from webarchive_discovery_spark.operators import textstats
+
+    docs = spark.range(8).select(
+        F.col("id"),
+        F.concat(F.lit("The cat sat on the mat. Lorem ipsum {x}.\nItem "),
+                 F.col("id").cast("string"), F.lit(" is a good one!")).alias("text"),
+    )
+    cleaned = textstats.c4_line_filter(docs, "text")
+    args = ("clean_text", "id") if op == "repetition_stats" else ("clean_text",)
+    plan = getattr(textstats, op)(cleaned, *args)._jdf.queryExecution().optimizedPlan()
+
+    def nodes(node):
+        yield node
+        children = node.children()
+        for i in range(children.size()):
+            yield from nodes(children.apply(i))
+
+    def seq(scala_seq):
+        return [scala_seq.apply(i) for i in range(scala_seq.size())]
+
+    barriers = [n for n in nodes(plan) if n.nodeName() == "Filter"
+                and "spark_partition_id" in n.condition().toString().lower()]
+    assert len(barriers) == 1, plan.toString()
+    ladder = [n for n in nodes(plan) if n.nodeName() == "Project"
+              and ladder_input in {a.name() for a in seq(n.references().toSeq())}]
+    assert ladder, plan.toString()
+    for project in ladder:
+        for expr in seq(project.projectList()):
+            assert "array_join" not in expr.toString(), expr.toString()

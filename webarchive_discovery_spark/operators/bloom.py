@@ -21,11 +21,13 @@ exists in one process.  The scaffold is shared with the cuckoo filter
 Deletion (recrawl expiry) is the cuckoo filter's job
 (``CuckooFilter.remove_hashes``).
 
-At the 1e10 design point with FPR 1e-6 the total is m = n·ln(1e-6)/ln(2)² ≈
-28.8 bits/URL → ~36 GB split over ~1024 shards of ~35 MB — each executor
-holds only the shards it probes, and k = 20 probes stay in one or two cache
-lines per URL because we derive all k indexes from one 64-bit hash
-(Kirsch–Mitzenmacher double hashing).
+Both families are sized from the membership set they are built from
+(:func:`sized_params`), so FPR 1e-6 holds at every seen-set size.  At the
+1e10 design point the Bloom total is m = n·ln(1e-6)/ln(2)² ≈ 28.8 bits/URL
+→ ~36 GB split over 1024 shards of ~35 MB — each executor holds only the
+shards it probes, and k = 20 probes stay in one or two cache lines per URL
+because we derive all k indexes from one 64-bit hash (Kirsch–Mitzenmacher
+double hashing).
 """
 
 from __future__ import annotations
@@ -49,7 +51,14 @@ __all__ = [
     "bloom_negative_filter_sharded",
     "build_shards",
     "probe_shards",
+    "sized_params",
 ]
+
+#: URL-seen prefilter false-positive rate: the north-star bound.
+SEEN_FPR = 1e-6
+#: One shard's byte budget: 1e10 URLs at :data:`SEEN_FPR` → 1024 Bloom
+#: shards of ~35 MB (cuckoo: 64 MiB).
+SHARD_MAX_BYTES = 64 << 20
 
 
 @dataclass(frozen=True)
@@ -74,6 +83,21 @@ class BloomParams:
     @property
     def k_hashes(self) -> int:
         return max(1, round((self.m_bits_per_shard * self.num_shards / self.n_capacity) * math.log(2)))
+
+    @property
+    def shard_bytes(self) -> int:
+        return self.m_bits_per_shard // 8
+
+
+def sized_params(params_cls, n: int, parallelism: int):
+    """``params_cls(n, SEEN_FPR, num_shards)`` (:class:`BloomParams` or
+    ``cuckoo.CuckooParams``) for a membership set of ``n ≥ 1`` keys:
+    ``num_shards`` is the smallest power of two ≥ ``parallelism`` whose
+    ``shard_bytes`` fits :data:`SHARD_MAX_BYTES`."""
+    num_shards = 1 << max(0, parallelism - 1).bit_length()
+    while (params := params_cls(n, SEEN_FPR, num_shards)).shard_bytes > SHARD_MAX_BYTES:
+        num_shards *= 2
+    return params
 
 
 def _shard_probe_masks(hashes: np.ndarray, params: BloomParams):
@@ -221,18 +245,20 @@ def build_bloom_shards(df: DataFrame, hash_col: str, params: BloomParams) -> Dat
     """Fully-distributed Bloom build at the 1e10 design point (see
     :func:`build_shards`).  Returns ``(shard_id int, bits binary)`` — the
     durable form (write it to parquet next to the seen-set snapshot for
-    resume).  Peak per-task memory = one shard = ``m_bits_per_shard/8``
-    bytes (~35 MB at the design point with 1024 shards)."""
-    words = params.m_bits_per_shard // 64
+    resume).  Peak per-task memory = one shard = ``shard_bytes`` (~35 MB at
+    the design point with 1024 shards)."""
+    return build_shards(
+        df, hash_col, params.num_shards, lambda _, h: shard_bits(h, params).tobytes(), "bits"
+    )
 
-    def kernel(shard_id: int, h: np.ndarray) -> bytes:
-        bits = np.zeros(words, dtype=np.uint64)
-        word, mask = _shard_probe_masks(h, params)
-        for ki in range(params.k_hashes):
-            np.bitwise_or.at(bits, word[ki], mask[ki])
-        return bits.tobytes()
 
-    return build_shards(df, hash_col, params.num_shards, kernel, "bits")
+def shard_bits(hashes: np.ndarray, params: BloomParams) -> np.ndarray:
+    """One shard's bit array over the int64 ``hashes`` routed to it."""
+    bits = np.zeros(params.m_bits_per_shard // 64, dtype=np.uint64)
+    word, mask = _shard_probe_masks(hashes, params)
+    for ki in range(params.k_hashes):
+        np.bitwise_or.at(bits, word[ki], mask[ki])
+    return bits
 
 
 def bloom_negative_filter_sharded(

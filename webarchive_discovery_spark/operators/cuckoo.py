@@ -26,8 +26,9 @@ Sharding uses the scaffold shared with the Bloom (``bloom.build_shards`` /
 ``bloom.probe_shards``): shard id = ``hash mod num_shards``, one task builds
 one shard's whole table, probes cogroup rows with their shard — the full
 matrix never exists in one place.  This module supplies only the per-shard
-kernels.  At 1e10 URLs / 1024 shards a shard's table is ~30 MB (2^23
-buckets × 4 × uint32).
+kernels; ``bloom.sized_params`` sizes both families from the membership
+set.  At 1e10 URLs / 1024 shards a shard's table is 64 MiB (2^22 buckets ×
+4 × uint32).
 """
 
 from __future__ import annotations
@@ -83,10 +84,18 @@ class CuckooParams:
     @property
     def num_buckets_per_shard(self) -> int:
         """Power of two (i2 = i1 XOR offset must stay in range) sized so the
-        shard holds its capacity share at ``load_factor``."""
-        per_shard = self.n_capacity / self.num_shards
-        need = max(1.0, per_shard / (self.bucket_size * self.load_factor))
+        HEAVIEST shard holds its keys at ``load_factor``: ``hash mod
+        num_shards`` spreads the keys binomially, and a shard above the
+        size it was built for overflows and aborts the build, so it is
+        sized for its mean share + 6σ (+6 for tiny sets)."""
+        mean = self.n_capacity / self.num_shards
+        heaviest = mean + 6 * math.sqrt(mean) + 6
+        need = max(1.0, heaviest / (self.bucket_size * self.load_factor))
         return 1 << max(1, math.ceil(math.log2(need)))
+
+    @property
+    def shard_bytes(self) -> int:
+        return self.num_buckets_per_shard * self.bucket_size * 4  # uint32 slots
 
 
 class CuckooFilter:
@@ -136,9 +145,10 @@ class CuckooFilter:
 
     def _insert(self, f: np.uint32, i: int) -> bool:
         """Place fingerprint ``f`` in bucket ``i`` or its alternate, else
-        evict deterministically (victim slot ``(kicks + fp) mod b``) for up
-        to ``max_kicks`` rounds.  False when the last evicted fingerprint
-        found no slot — it is then lost."""
+        evict deterministically for up to ``max_kicks`` rounds.  False when
+        the last evicted fingerprint found no slot — it is then lost.  The
+        victim slot is a hash of (fp, kicks): ``(kicks + fp) mod b`` can
+        walk a closed cycle and drop keys at ~0.8 load."""
         table, b = self.table, self.params.bucket_size
         for idx in (i, int(self._alt_index(i, f))):
             empty = np.nonzero(table[idx] == 0)[0]
@@ -147,7 +157,7 @@ class CuckooFilter:
                 return True
         idx = i
         for kicks in range(self.params.max_kicks):
-            victim = (kicks + int(f)) % b
+            victim = ((int(f) * 0x9E3779B1 + kicks * 0x85EBCA77) >> 7) % b
             f, table[idx, victim] = table[idx, victim], f
             idx = int(self._alt_index(idx, f))
             empty = np.nonzero(table[idx] == 0)[0]
@@ -233,9 +243,9 @@ def build_cuckoo_shards(df: DataFrame, hash_col: str, params: CuckooParams) -> D
     builds its whole shard's table in isolation.  Returns ``(shard_id int,
     table binary)`` — durable (parquet next to the seen-set snapshot),
     mergeable via :meth:`CuckooFilter.merge`.  Raises in the task if any key
-    is dropped (a drop would break the no-false-negative contract) — size
-    capacity generously; at α = 0.95 with b = 4 drops are vanishingly rare
-    below capacity."""
+    is dropped (a drop would break the no-false-negative contract); size
+    ``params`` from the membership set (``bloom.sized_params``), whose
+    buckets absorb the shard skew."""
 
     def kernel(shard_id: int, h: np.ndarray) -> bytes:
         filt = CuckooFilter(params)

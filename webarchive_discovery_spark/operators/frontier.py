@@ -87,22 +87,42 @@ def release_staging() -> int:
     return 0
 
 
+# scheme://[userinfo@]host[:port] (group 1: reg-name or [IP-literal]) then
+# the path (group 2); group 1 is "" when the authority is malformed.
+_AUTHORITY_RE = (
+    r"^(?:[A-Za-z][A-Za-z0-9+.-]*://(?:[^@/?#]*@)?"
+    r"(\[[0-9A-Fa-f:.]+\]|[A-Za-z0-9._~%!$&'()*+,;=-]+)(?::[0-9]*)?(?=[/?#]|$)([^?#]*))?"
+)
+
+
 def canonicalize_frontier(df: DataFrame, url_col: str = "url") -> DataFrame:
     """Project the canonical columns every downstream operator keys on:
     ``url_norm`` (canonical URL), ``url_key`` (SURT sort key), ``host``,
     ``url_path``, ``url_hash`` (xxhash64 of url_norm — the 64-bit seen key).
 
     URLs are capped at 2000 chars first, matching the reference
-    (``WARCIndexer.java:330-331``, ``SolrRecordFactory.java:121-125``)."""
+    (``WARCIndexer.java:330-331``, ``SolrRecordFactory.java:121-125``).
+
+    ``host``/``url_path`` are ``parse_url``'s where ``java.net.URI``
+    parses ``url_norm``; where it rejects it (the canonical form keeps
+    ``|``, ``{``, ``"`` and control characters, as the reference does) they
+    come from :data:`_AUTHORITY_RE`, and are NULL when no host parses."""
     df = df.withColumn(url_col, F.substring(F.col(url_col), 1, 2000))
     out = df.withColumn("_c", canonical_struct_udf(F.col(url_col)))
     out = out.withColumn("url_norm", F.col("_c.url_norm")).withColumn(
         "url_key", F.col("_c.url_key")
     ).drop("_c")
+    norm = F.col("url_norm")
+    path = F.try_parse_url(norm, F.lit("PATH"))
+    # a parsed URI has a scheme (absolute) or a path (relative, maybe "")
+    parsed = F.try_parse_url(norm, F.lit("PROTOCOL")).isNotNull() | path.isNotNull()
+    loose_host = F.nullif(F.regexp_extract(norm, _AUTHORITY_RE, 1), F.lit(""))
     out = out.withColumn(
-        "host", F.parse_url(F.col("url_norm"), F.lit("HOST"))
+        "host", F.when(parsed, F.try_parse_url(norm, F.lit("HOST"))).otherwise(loose_host)
     ).withColumn(
-        "url_path", F.coalesce(F.parse_url(F.col("url_norm"), F.lit("PATH")), F.lit("/"))
+        "url_path",
+        F.when(parsed, F.coalesce(path, F.lit("/")))
+        .when(loose_host.isNotNull(), F.regexp_extract(norm, _AUTHORITY_RE, 2)),
     )
     return out.withColumn("url_hash", F.xxhash64(F.col("url_norm")))
 

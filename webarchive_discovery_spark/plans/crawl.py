@@ -34,6 +34,7 @@ from pyspark.sql.types import (
 
 from ..functions.imaging import average_hash, decode_image, image_dims
 from ..functions.normalisation import sha1_base32_digest
+from ..operators import cuckoo as cop
 from ..operators import frontier as fop
 from ..operators.bloom import (
     BloomParams,
@@ -41,6 +42,7 @@ from ..operators.bloom import (
     bloom_negative_filter_sharded,
     build_bloom,
     build_bloom_shards,
+    sized_params,
 )
 from .checkpoint import CheckpointStore
 
@@ -52,17 +54,14 @@ class CrawlConfig:
     epochs: int = 3
     host_budget: int = 100
     checkpoint_dir: str | None = None
-    use_bloom: bool = True
-    bloom_capacity: int = 1_000_000
-    bloom_fpr: float = 1e-6
-    bloom_shards: int = 16
-    # URL-seen prefilter family: "bloom" (broadcast tier, or the sharded
-    # tier once the configured matrix exceeds _BLOOM_BROADCAST_MAX_BYTES)
-    # or "cuckoo" (operators.cuckoo — deletion-capable partial-key tables,
-    # ~24 bits/URL at FPR 1e-6 vs the Bloom's 28.8, two-bucket probes).
-    # Both obey the same contract: negative ⇒ definitely new; positives
-    # confirm against the exact seen-set.
-    seen_filter: str = "bloom"
+    # URL-seen prefilter family, sized each epoch from the membership set
+    # (bloom.sized_params): "bloom" (broadcast tier, or the sharded tier
+    # once the matrix exceeds _BLOOM_BROADCAST_MAX_BYTES), "cuckoo"
+    # (operators.cuckoo — deletion-capable partial-key tables, ~24 bits/URL
+    # at FPR 1e-6 vs the Bloom's 28.8, two-bucket probes) or None (the exact
+    # anti-/semi-join alone).  Negative ⇒ definitely new; positives confirm
+    # against the exact seen-set.
+    seen_filter: str | None = "bloom"
     num_partitions: int | None = None
     # entries expire after this many epochs (None = never): expired URLs are
     # dropped from the seen-set and refetched — recrawl semantics
@@ -73,8 +72,6 @@ class CrawlConfig:
     # exactly when its revisit interval has elapsed, so fast-changing pages
     # refetch every min interval and static pages back off exponentially
     adaptive_recrawl: bool = False
-    recrawl_min_interval: int = 1
-    recrawl_max_interval: int = 16
     # simulated epoch wall-clock: per-host budget becomes
     # min(host_budget, floor(epoch_duration_ms / crawl_delay_ms)) — the
     # robots crawl-delay actually throttles hosts (None = host_budget only)
@@ -82,11 +79,9 @@ class CrawlConfig:
     # link-structure priority: run PageRank over the host graph once before
     # the epochs and feed the normalized rank into priority_score's affinity
     # term (the north rule's third priority input), weighted by
-    # ``pagerank_weight``.  Ranks are rounded to 6 decimals so float
+    # _PAGERANK_WEIGHT.  Ranks are rounded to 6 decimals so float
     # summation order can't perturb the deterministic fetch order.
     use_pagerank: bool = False
-    pagerank_weight: float = 0.5
-    pagerank_iterations: int = 5
     # sitemap discovery channel (operators.sitemap): parsed URL entries from
     # sitemap captures seed the epoch-0 frontier (hops=1 — one fetch away),
     # and their protocol-derived score (publisher priority + changefreq +
@@ -97,13 +92,12 @@ class CrawlConfig:
     sitemap_as_of: str | None = None
     # fetch-error retry backoff: failed URLs re-enter the next epoch's
     # frontier with ``retries + 1`` (priority penalized by
-    # ``retry_penalty × retries``) until ``max_retries`` is exhausted, at
+    # _RETRY_PENALTY × retries) until ``max_retries`` is exhausted, at
     # which point the URL joins the seen-set with an ``unfetchable`` digest
     # sentinel so rediscovered links stop producing candidates (recrawl
     # expiry re-admits it once the window passes — transient outages heal).
     # 0 = off (failed URLs retry only on organic link rediscovery).
     max_retries: int = 0
-    retry_penalty: float = 0.3
     # politeness scope: "host" (default — per-hostname budgets/slots) or
     # "domain" (per REGISTERED domain via the PSL private suffix, so
     # a.example.org and b.example.org share one budget — how real crawlers
@@ -112,11 +106,17 @@ class CrawlConfig:
     politeness_key: str = "host"
 
 
-# Above this configured bit-matrix size the Bloom tier switches from the
-# broadcast matrix (the shard build collected on the driver) to the cogroup
-# probe of the shards in place, which never holds more than one shard in any
-# process (the 1e10 design point).
+# Above this bit-matrix size the Bloom tier switches from the broadcast
+# matrix (the shard build collected on the driver) to the cogroup probe of
+# the shards in place, which never holds more than one shard in any process
+# (the 1e10 design point).
 _BLOOM_BROADCAST_MAX_BYTES = 4 << 30
+
+# Host PageRank: iterations, and the affinity of the top-ranked host.
+_PAGERANK_ITERATIONS = 5
+_PAGERANK_WEIGHT = 0.5
+# Priority penalty per failed fetch attempt (CrawlConfig.max_retries).
+_RETRY_PENALTY = 0.3
 
 
 _FETCH_RESULT_FIELDS = [
@@ -265,7 +265,7 @@ def _epoch_plan(
         rm = rm.join(F.broadcast(sitemap_rank), "url_hash", "left")
         affinity = affinity + F.coalesce(F.col("sitemap_affinity"), F.lit(0.0))
     if cfg.max_retries > 0:
-        affinity = affinity - F.col("retries") * F.lit(cfg.retry_penalty)
+        affinity = affinity - F.col("retries") * F.lit(_RETRY_PENALTY)
     pri = rm.withColumn(
         "priority", fop.priority_score(F.col("hops"), F.col("inlinks"), affinity)
     )
@@ -326,8 +326,6 @@ def _membership(history: DataFrame, epoch: int, cfg: CrawlConfig) -> DataFrame:
         sched = fop.recrawl_schedule(
             history.select("url_hash", F.col("first_epoch").alias("epoch"), "digest"),
             current_epoch=epoch + 1,
-            min_interval=cfg.recrawl_min_interval,
-            max_interval=cfg.recrawl_max_interval,
         )
         due = sched.filter(F.col("due")).select(F.col("key").alias("url_hash"))
         return history.join(due, "url_hash", "left_anti")
@@ -354,8 +352,8 @@ def run_crawl(
     boosts priority (see ``CrawlConfig.sitemap_weight``).  Resume stays
     bit-exact — the augmented frontier is already inside the epoch-0
     snapshot, and the affinity dim is rebuilt deterministically."""
-    if cfg.seen_filter not in ("bloom", "cuckoo"):
-        raise ValueError(f"seen_filter must be bloom|cuckoo, got {cfg.seen_filter!r}")
+    if cfg.seen_filter not in ("bloom", "cuckoo", None):
+        raise ValueError(f"seen_filter must be bloom|cuckoo|None, got {cfg.seen_filter!r}")
     store = CheckpointStore(cfg.checkpoint_dir) if cfg.checkpoint_dir else None
 
     # canonicalize the link graph once (one UDF pass over edges)
@@ -377,11 +375,11 @@ def run_crawl(
             .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
             .distinct()
         )
-        pr = pagerank(hedges, iterations=cfg.pagerank_iterations)
+        pr = pagerank(hedges, iterations=_PAGERANK_ITERATIONS)
         mx = pr.agg(F.max("rank")).collect()[0][0] or 1.0
         host_rank = pr.select(
             F.col("vertex").alias("host"),
-            F.round(F.col("rank") / mx * cfg.pagerank_weight, 6).alias("host_affinity"),
+            F.round(F.col("rank") / mx * _PAGERANK_WEIGHT, 6).alias("host_affinity"),
         ).localCheckpoint()
 
     # sitemap discovery: parse once, score once; a tiny (url_hash →
@@ -437,35 +435,28 @@ def run_crawl(
         )
         frontier_df = frontier_df.unionByName(discovered)
 
+    parallelism = spark.sparkContext.defaultParallelism
     logs = []
     metrics = []
     for epoch in range(start_epoch, cfg.epochs):
+        # the membership set's size sizes this epoch's filter; with nothing
+        # seen the exact split alone runs (no Python stage at all)
         bloom_probe = None
-        if cfg.use_bloom and not seen.take(1):
-            # nothing seen yet: every candidate is definitely new — skip
-            # the filter tiers (no Python stage at all)
-            def bloom_probe(df):
-                return df.withColumn("maybe_seen", F.lit(False))
-        elif cfg.use_bloom and cfg.seen_filter == "cuckoo":
+        n_seen = seen.count() if cfg.seen_filter else 0
+        if n_seen and cfg.seen_filter == "cuckoo":
             # cuckoo tier: same prefilter contract (negative ⇒ definitely
             # new), deletion-capable and ~17% smaller at FPR 1e-6.  Rebuilt
             # per epoch from the membership set like the Bloom, so recrawl
             # expiry needs no in-place deletion here; remove_hashes serves
             # long-lived filters maintained across epochs.
-            from ..operators.cuckoo import (
-                CuckooParams,
-                build_cuckoo_shards,
-                cuckoo_negative_filter_sharded,
-            )
-
-            cparams = CuckooParams(cfg.bloom_capacity, cfg.bloom_fpr, cfg.bloom_shards)
-            cshards = build_cuckoo_shards(seen, "url_hash", cparams).localCheckpoint()
+            cparams = sized_params(cop.CuckooParams, n_seen, parallelism)
+            cshards = cop.build_cuckoo_shards(seen, "url_hash", cparams).localCheckpoint()
 
             def bloom_probe(df, _shards=cshards, _p=cparams):
-                return cuckoo_negative_filter_sharded(df, "url_hash", _shards, _p)
-        elif cfg.use_bloom:
-            params = BloomParams(cfg.bloom_capacity, cfg.bloom_fpr, cfg.bloom_shards)
-            if params.m_bits_per_shard * params.num_shards // 8 > _BLOOM_BROADCAST_MAX_BYTES:
+                return cop.cuckoo_negative_filter_sharded(df, "url_hash", _shards, _p)
+        elif n_seen:
+            params = sized_params(BloomParams, n_seen, parallelism)
+            if params.shard_bytes * params.num_shards > _BLOOM_BROADCAST_MAX_BYTES:
                 shards = build_bloom_shards(seen, "url_hash", params).localCheckpoint()
 
                 def bloom_probe(df, _shards=shards, _p=params):

@@ -6400,8 +6400,7 @@ def crawl_two_epochs(spark, sf_dir):
 
     records = ids.mapInPandas(gen, FRONTIER_SCHEMA)
 
-    cfg = CrawlConfig(epochs=2, host_budget=10, max_retries=1,
-                      retry_penalty=0.3)
+    cfg = CrawlConfig(epochs=2, host_budget=10, max_retries=1)
     res = run_crawl(spark, records, seeds, link_graph, robots_rules, cfg)
     log = res["crawl_log"]
     return log.select(
