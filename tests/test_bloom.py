@@ -174,6 +174,9 @@ def test_seen_filters_sized_from_the_membership_set():
         bp = sized_params(BloomParams, n, 4)
         total = bp.shard_bytes * bp.num_shards
         assert (total <= _BLOOM_BROADCAST_MAX_BYTES) == (n <= 10**9), (n, total)
+    # far fewer members than whole-word shards: k stays at the optimum
+    for parallelism in (4, 64):
+        assert sized_params(BloomParams, 1, parallelism).k_hashes <= 20
     design = sized_params(BloomParams, 10**10, 4)
     assert design.num_shards == 1024 and 35e6 <= design.shard_bytes < 36e6  # ~35 MB
 

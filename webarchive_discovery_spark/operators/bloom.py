@@ -82,7 +82,9 @@ class BloomParams:
 
     @property
     def k_hashes(self) -> int:
-        return max(1, round((self.m_bits_per_shard * self.num_shards / self.n_capacity) * math.log(2)))
+        # log2(1/fpr), the optimum (m/n)·ln 2 before m is rounded up to
+        # whole words; from the rounded m, 1 member over 64 shards gave 2839
+        return max(1, round(-math.log2(self.fpr)))
 
     @property
     def shard_bytes(self) -> int:

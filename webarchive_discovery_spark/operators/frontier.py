@@ -112,17 +112,18 @@ def canonicalize_frontier(df: DataFrame, url_col: str = "url") -> DataFrame:
     out = out.withColumn("url_norm", F.col("_c.url_norm")).withColumn(
         "url_key", F.col("_c.url_key")
     ).drop("_c")
-    norm = F.col("url_norm")
-    path = F.try_parse_url(norm, F.lit("PATH"))
-    # a parsed URI has a scheme (absolute) or a path (relative, maybe "")
-    parsed = F.try_parse_url(norm, F.lit("PROTOCOL")).isNotNull() | path.isNotNull()
+    norm, path = F.col("url_norm"), F.col("url_path")
+    # PATH is NULL for an opaque URI or a rejected one; a column of its own,
+    # so each row parses it once
+    out = out.withColumn("url_path", F.try_parse_url(norm, F.lit("PATH")))
     loose_host = F.nullif(F.regexp_extract(norm, _AUTHORITY_RE, 1), F.lit(""))
     out = out.withColumn(
-        "host", F.when(parsed, F.try_parse_url(norm, F.lit("HOST"))).otherwise(loose_host)
+        "host", F.when(path.isNotNull(), F.try_parse_url(norm, F.lit("HOST"))).otherwise(loose_host)
     ).withColumn(
         "url_path",
-        F.when(parsed, F.coalesce(path, F.lit("/")))
-        .when(loose_host.isNotNull(), F.regexp_extract(norm, _AUTHORITY_RE, 2)),
+        F.when(path.isNotNull(), path)
+        .when(loose_host.isNotNull(), F.regexp_extract(norm, _AUTHORITY_RE, 2))
+        .when(F.try_parse_url(norm, F.lit("PROTOCOL")).isNotNull(), F.lit("/")),
     )
     return out.withColumn("url_hash", F.xxhash64(F.col("url_norm")))
 

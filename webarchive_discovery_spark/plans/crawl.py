@@ -439,11 +439,18 @@ def run_crawl(
     logs = []
     metrics = []
     for epoch in range(start_epoch, cfg.epochs):
-        # the membership set's size sizes this epoch's filter; with nothing
-        # seen the exact split alone runs (no Python stage at all)
+        # the membership set's size sizes this epoch's filter.  Counting the
+        # merged parquet deltas (or the in-memory checkpoint) reads no
+        # column; a recrawl window reads first_epoch, and the adaptive
+        # schedule's anti-join runs once more for it.
         bloom_probe = None
         n_seen = seen.count() if cfg.seen_filter else 0
-        if n_seen and cfg.seen_filter == "cuckoo":
+        if cfg.seen_filter and not n_seen:
+            # nothing seen yet: every candidate is definitely new — the
+            # constant folds the split to no join and no Python stage
+            def bloom_probe(df):
+                return df.withColumn("maybe_seen", F.lit(False))
+        elif cfg.seen_filter == "cuckoo":
             # cuckoo tier: same prefilter contract (negative ⇒ definitely
             # new), deletion-capable and ~17% smaller at FPR 1e-6.  Rebuilt
             # per epoch from the membership set like the Bloom, so recrawl
@@ -454,7 +461,7 @@ def run_crawl(
 
             def bloom_probe(df, _shards=cshards, _p=cparams):
                 return cop.cuckoo_negative_filter_sharded(df, "url_hash", _shards, _p)
-        elif n_seen:
+        elif cfg.seen_filter:
             params = sized_params(BloomParams, n_seen, parallelism)
             if params.shard_bytes * params.num_shards > _BLOOM_BROADCAST_MAX_BYTES:
                 shards = build_bloom_shards(seen, "url_hash", params).localCheckpoint()
