@@ -200,36 +200,97 @@ def test_checkpoint_resume_from_compacted_snapshot_bit_exact(spark, world, tmp_p
     assert rows == [t for t in full_rows if t[0] == 2]
 
 
-def test_sharded_bloom_tier_at_design_capacity(spark, world, monkeypatch):
-    """When the data-sized matrix exceeds the broadcast limit, the crawl
-    loop must select the fully-distributed sharded build/probe: the limit
-    is monkeypatched to 0 (the 1e10 design point's ~36 GB matrix is what
-    crosses the real 4 GiB limit, see test_bloom's sizing test), the
-    broadcast tier (``build_bloom``, which collects the whole bit matrix to
-    the driver) is monkeypatched to fail, and the crawl output must equal
-    the exact-only (no-prefilter) run bit-for-bit, proving the Bloom stays
-    a pure prefilter on this tier too."""
-    import webarchive_discovery_spark.plans.crawl as crawl_mod
-
-    def boom(*a, **k):  # the full-matrix tier must never run
-        raise AssertionError("broadcast-tier build_bloom called on the sharded tier")
-
-    monkeypatch.setattr(crawl_mod, "build_bloom", boom)
-    monkeypatch.setattr(crawl_mod, "_BLOOM_BROADCAST_MAX_BYTES", 0)
-    records, seeds, links, robots = world
-    cfg = CrawlConfig(epochs=2, host_budget=50, num_partitions=4)
-    res = run_crawl(spark, records, seeds, links, robots, cfg)
-    sharded_rows = sorted(
+def _log_rows(res):
+    return sorted(
         (r["epoch"], r["url_key"], r["status"], r["fetch_seq"])
         for r in res["crawl_log"].collect()
     )
-    cfg_exact = CrawlConfig(epochs=2, host_budget=50, num_partitions=4, seen_filter=None)
-    res_exact = run_crawl(spark, records, seeds, links, robots, cfg_exact)
-    exact_rows = sorted(
-        (r["epoch"], r["url_key"], r["status"], r["fetch_seq"])
-        for r in res_exact["crawl_log"].collect()
-    )
-    assert sharded_rows == exact_rows
+
+
+def test_cuckoo_tier_above_broadcast_limit(spark, world, monkeypatch):
+    """When the data-sized Bloom matrix exceeds the broadcast limit, the
+    crawl loop must probe the sharded cuckoo instead: the limit is
+    monkeypatched to 0 (the 1e10 design point's ~36 GB matrix is what
+    crosses the real 4 GiB limit, see test_bloom's sizing test) and the
+    broadcast tier (``build_bloom``, which collects the whole bit matrix to
+    the driver) is monkeypatched to fail.  The crawl output must equal,
+    bit for bit, a reference run whose prefilter marks every row
+    maybe-seen, so that every row is verified by the exact join: the
+    cuckoo stays a pure prefilter."""
+    import webarchive_discovery_spark.operators.cuckoo as cop
+    import webarchive_discovery_spark.plans.crawl as crawl_mod
+
+    with monkeypatch.context() as m:
+        m.setattr(crawl_mod, "bloom_negative_filter",
+                  lambda df, hash_col, bloom: df.withColumn("maybe_seen", F.lit(True)))
+        exact_rows = _log_rows(_run(spark, world))
+
+    def boom(*a, **k):  # the full-matrix tier must never run
+        raise AssertionError("broadcast-tier build_bloom called above the limit")
+
+    built, build_cuckoo_shards = [], cop.build_cuckoo_shards
+
+    def capture(seen, hash_col, params):
+        built.append(params)
+        return build_cuckoo_shards(seen, hash_col, params)
+
+    monkeypatch.setattr(crawl_mod, "build_bloom", boom)
+    monkeypatch.setattr(crawl_mod, "_BLOOM_BROADCAST_MAX_BYTES", 0)
+    monkeypatch.setattr(cop, "build_cuckoo_shards", capture)
+    res = _run(spark, world)
+    assert len(built) == 2  # epoch 0 has nothing seen and builds no filter
+    # later epochs actually exercised the filter: dup_seen rows exist
+    assert res["crawl_log"].filter(F.col("status") == "dup_seen").count() > 0
+    assert _log_rows(res) == exact_rows
+
+
+def test_epoch_canonicalizes_and_probes_once(spark, world, monkeypatch):
+    """A crawl canonicalizes its link graph once per ``run_crawl`` call and
+    each epoch's frontier once, and the URL-seen probe sees exactly the
+    deduped rows once.  The canonicalize UDF and the probe are wrapped to
+    count the rows they are evaluated over; a filter pushed below the
+    dedup aggregate, or a frame recomputed per consumer, shows as extra
+    rows."""
+    import webarchive_discovery_spark.operators.frontier as fop
+    import webarchive_discovery_spark.plans.crawl as crawl_mod
+
+    sc = spark.sparkContext
+    canon_rows, probe_rows = sc.accumulator(0), sc.accumulator(0)
+    canon = fop.canonical_struct_udf
+
+    @F.pandas_udf(canon.returnType)
+    def counted_canon(urls):
+        canon_rows.add(len(urls))
+        return canon.func(urls)
+
+    @F.pandas_udf("boolean")
+    def counted_probe(maybe_seen):
+        probe_rows.add(len(maybe_seen))
+        return maybe_seen
+
+    bloom_negative_filter = crawl_mod.bloom_negative_filter
+
+    def probe(df, hash_col, bloom):
+        return bloom_negative_filter(df, hash_col, bloom).withColumn(
+            "maybe_seen", counted_probe("maybe_seen")
+        )
+
+    monkeypatch.setattr(fop, "canonical_struct_udf", counted_canon)
+    monkeypatch.setattr(crawl_mod, "bloom_negative_filter", probe)
+    log = _run(spark, world, epochs=2)["crawl_log"]
+    links = world[2]
+    # the crawl log holds one row per deduped candidate; inlinks counts
+    # the frontier rows each one merged
+    per_epoch = {
+        r["epoch"]: (r["candidates"], r["frontier_rows"])
+        for r in log.groupBy("epoch").agg(
+            F.count(F.lit(1)).alias("candidates"),
+            F.sum("inlinks").alias("frontier_rows"),
+        ).collect()
+    }
+    assert canon_rows.value == links.count() + sum(f for _, f in per_epoch.values())
+    # epoch 0 has nothing seen and probes nothing
+    assert probe_rows.value == per_epoch[1][0]
 
 
 def test_recrawl_expiry_refetches(spark, world):
@@ -502,33 +563,6 @@ def test_domain_politeness_shares_budget(spark, world):
     n_domain = per_domain["crawl_log"].filter(F.col("status") == "fetched").count()
     assert n_domain <= 10  # one example.org budget for the whole world
     assert n_host > n_domain  # per-host budgets admit more
-
-
-def test_cuckoo_seen_filter_tier(spark, world):
-    """seen_filter='cuckoo': the deletion-capable prefilter drives the crawl
-    loop and produces BIT-IDENTICAL results to the Bloom tier (both are
-    prefilters over the same exact seen-set)."""
-    records, seeds, links, robots = world
-    base = dict(epochs=3, host_budget=50, num_partitions=4)
-    bloom = run_crawl(spark, records, seeds, links, robots, CrawlConfig(**base))
-    cuckoo = run_crawl(spark, records, seeds, links, robots,
-                       CrawlConfig(**base, seen_filter="cuckoo"))
-    key = lambda res: sorted(
-        (r["epoch"], r["url_key"], r["status"], r["fetch_seq"])
-        for r in res["crawl_log"].collect()
-    )
-    assert key(bloom) == key(cuckoo)
-    # later epochs actually exercised the filter: dup_seen rows exist
-    assert cuckoo["crawl_log"].filter(F.col("status") == "dup_seen").count() > 0
-
-
-def test_seen_filter_rejects_unknown_family(spark, world):
-    """A misspelt ``seen_filter`` raises instead of silently running the
-    Bloom tier."""
-    records, seeds, links, robots = world
-    cfg = CrawlConfig(epochs=1, host_budget=50, num_partitions=4, seen_filter="Cuckoo")
-    with pytest.raises(ValueError, match="seen_filter"):
-        run_crawl(spark, records, seeds, links, robots, cfg)
 
 
 def test_retry_counter_survives_link_rediscovery(spark, world):

@@ -197,7 +197,6 @@ def cmd_crawl(args) -> int:
         epochs=args.epochs,
         host_budget=args.host_budget,
         checkpoint_dir=args.checkpoint_dir,
-        seen_filter=None if args.no_bloom else "bloom",
         recrawl_epochs=args.recrawl_epochs,
         adaptive_recrawl=args.adaptive_recrawl,
         epoch_duration_ms=args.epoch_duration_ms,
@@ -276,10 +275,6 @@ def build_parser() -> argparse.ArgumentParser:
     cr.add_argument("--epoch-duration-ms", type=int, default=None,
                     help="simulated epoch wall-clock: host budget becomes "
                          "min(host-budget, duration/crawl_delay)")
-    cr.add_argument("--no-bloom", action="store_true",
-                    help="URL-seen by the exact anti-join alone, without "
-                         "the Bloom prefilter (which each epoch sizes from "
-                         "the seen-set at FPR 1e-6)")
     cr.add_argument("-o", "--output", default=None,
                     help="parquet path for the crawl log")
     _add_common(cr)

@@ -20,14 +20,10 @@ from . import surt as S
 
 __all__ = [
     "canonicalise_url_udf",
-    "canonicalise_url_ambiguous_udf",
-    "canonicalise_host_udf",
     "host_surts_udf",
     "public_suffix_udf",
     "private_suffix_udf",
     "resolve_relative_udf",
-    "surt_key_udf",
-    "url_hash64",
 ]
 
 
@@ -45,21 +41,6 @@ def _safe(fn):
 @F.pandas_udf(StringType())
 def canonicalise_url_udf(urls: pd.Series) -> pd.Series:
     return urls.map(_safe(N.canonicalise_url))
-
-
-@F.pandas_udf(StringType())
-def canonicalise_url_ambiguous_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(_safe(lambda u: N.canonicalise_url(u, True, False)))
-
-
-@F.pandas_udf(StringType())
-def canonicalise_host_udf(hosts: pd.Series) -> pd.Series:
-    return hosts.map(_safe(N.canonicalise_host))
-
-
-@F.pandas_udf(StringType())
-def surt_key_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(_safe(S.surt_key))
 
 
 _CANON_STRUCT = StructType(
@@ -127,10 +108,3 @@ def resolve_relative_udf(base: pd.Series, rel: pd.Series) -> pd.Series:
         except Exception:
             out.append(None)
     return pd.Series(out, dtype=object)
-
-
-def url_hash64(col):
-    """64-bit URL-seen key — JVM-side ``xxhash64`` on the canonical URL
-    column (the engine's replacement for the reference's md5-of-URL record id,
-    ``WARCIndexer.java:519-524``, per the north rule)."""
-    return F.xxhash64(col)

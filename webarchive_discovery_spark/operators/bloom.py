@@ -15,7 +15,8 @@ one shard's bit array.  Broadcast (``build_bloom`` /
 matrix and broadcast — right while the whole matrix fits in memory.  Sharded
 (``build_bloom_shards`` / ``bloom_negative_filter_sharded``): the probe
 cogroups rows with their shard (``probe_shards``), so the full matrix never
-exists in one process.  The scaffold is shared with the cuckoo filter
+exists in one process; the crawl probes the sharded cuckoo there instead,
+and the sharded Bloom serves the seen-tier gates.  The scaffold is shared with the cuckoo filter
 (``operators.cuckoo``); each family supplies only its per-shard kernels.
 ``frontier.url_seen_split`` verifies the positives of any of them.
 Deletion (recrawl expiry) is the cuckoo filter's job

@@ -8,9 +8,10 @@ space than the Bloom at low FPR: with bucket size b=4 and load factor α≈0.95
 it stores ``f/α`` bits per key where ``FPR ≈ 2b/2^f``, so at the design point
 (FPR ≤ 1e-6) f = 23 bits → ~24.2 bits/URL vs the Bloom's 28.8 — and a
 membership probe touches exactly TWO buckets (two cache lines) instead of
-k = 20 scattered bits.  Same role in the crawl loop as the Bloom tier: a
-*prefilter* whose negative answer is definitive; positives are confirmed
-against the exact seen-set, so correctness never depends on the FPR.
+k = 20 scattered bits.  The crawl loop probes it once the Bloom matrix
+outgrows broadcast.  Like the Bloom it is a *prefilter* whose negative
+answer is definitive; positives are confirmed against the exact seen-set,
+so correctness never depends on the FPR.
 
 Partial-key cuckoo hashing: each key stores only a fingerprint
 ``fp = low bits of splitmix64(hash) (0 remapped — 0 marks an empty slot;

@@ -39,9 +39,9 @@ from ..operators import frontier as fop
 from ..operators.bloom import (
     BloomParams,
     bloom_negative_filter,
-    bloom_negative_filter_sharded,
+    bloom_negative_filter_sharded,  # noqa: F401 (perfbench/trace.py wraps it here)
     build_bloom,
-    build_bloom_shards,
+    build_bloom_shards,  # noqa: F401 (perfbench/trace.py wraps it here)
     sized_params,
 )
 from .checkpoint import CheckpointStore
@@ -54,14 +54,6 @@ class CrawlConfig:
     epochs: int = 3
     host_budget: int = 100
     checkpoint_dir: str | None = None
-    # URL-seen prefilter family, sized each epoch from the membership set
-    # (bloom.sized_params): "bloom" (broadcast tier, or the sharded tier
-    # once the matrix exceeds _BLOOM_BROADCAST_MAX_BYTES), "cuckoo"
-    # (operators.cuckoo — deletion-capable partial-key tables, ~24 bits/URL
-    # at FPR 1e-6 vs the Bloom's 28.8, two-bucket probes) or None (the exact
-    # anti-/semi-join alone).  Negative ⇒ definitely new; positives confirm
-    # against the exact seen-set.
-    seen_filter: str | None = "bloom"
     num_partitions: int | None = None
     # entries expire after this many epochs (None = never): expired URLs are
     # dropped from the seen-set and refetched — recrawl semantics
@@ -106,10 +98,10 @@ class CrawlConfig:
     politeness_key: str = "host"
 
 
-# Above this bit-matrix size the Bloom tier switches from the broadcast
-# matrix (the shard build collected on the driver) to the cogroup probe of
-# the shards in place, which never holds more than one shard in any process
-# (the 1e10 design point).
+# Above this Bloom bit-matrix size the URL-seen filter switches from the
+# broadcast Bloom (the shard build collected on the driver) to the sharded
+# cuckoo probed in place, which never holds more than one shard in any
+# process (the 1e10 design point).
 _BLOOM_BROADCAST_MAX_BYTES = 4 << 30
 
 # Host PageRank: iterations, and the affinity of the top-ranked host.
@@ -223,7 +215,7 @@ def _epoch_plan(
     robots_rules: DataFrame,
     records: DataFrame,
     cfg: CrawlConfig,
-    bloom_probe,  # Callable[[DataFrame], DataFrame] adding ``maybe_seen``, or None
+    seen_probe,  # Callable[[DataFrame], DataFrame] adding ``maybe_seen``
     host_rank: DataFrame | None = None,  # (host, host_affinity) broadcast dim
     sitemap_rank: DataFrame | None = None,  # (url_hash, sitemap_affinity) broadcast dim
 ) -> DataFrame:
@@ -252,9 +244,8 @@ def _epoch_plan(
     )
 
     # URL-seen: the Bloom/cuckoo prefilter (negative ⇒ definitely new, skips
-    # the join probe) + exact verify of its positives, or the exact
-    # anti-/semi-join alone when there is no prefilter
-    new, dup = fop.url_seen_split(dd, seen, bloom_probe)
+    # the join probe) + exact verify of its positives
+    new, dup = fop.url_seen_split(dd, seen, seen_probe)
 
     rm = fop.robots_match(new, robots_rules)
     affinity = F.lit(0.0)
@@ -332,6 +323,39 @@ def _membership(history: DataFrame, epoch: int, cfg: CrawlConfig) -> DataFrame:
     return history
 
 
+def _seen_prefilter(seen: DataFrame, n_seen: int, parallelism: int):
+    """The URL-seen prefilter for a membership set ``seen`` of ``n_seen``
+    URLs, sized from it (``bloom.sized_params``): a probe adding
+    ``maybe_seen`` (negative ⇒ definitely new) to the deduped frontier.
+
+    The count picks the structure: nothing seen → the constant ``False``,
+    which folds the split to no join and no Python stage; a Bloom matrix
+    within ``_BLOOM_BROADCAST_MAX_BYTES`` → the broadcast Bloom; beyond it →
+    the sharded cuckoo, deletion-capable and ~17% smaller at FPR 1e-6.
+    Either filter is rebuilt per epoch from the membership set, so recrawl
+    expiry needs no in-place deletion here.
+
+    The probed rows are pinned: ``maybe_seen`` depends only on the dedup's
+    group key, so Catalyst would push the split's filters below the
+    aggregate and each branch would re-canonicalize and re-probe the
+    pre-dedup rows."""
+    if not n_seen:
+        return lambda df: df.withColumn("maybe_seen", F.lit(False))
+    params = sized_params(BloomParams, n_seen, parallelism)
+    if params.shard_bytes * params.num_shards <= _BLOOM_BROADCAST_MAX_BYTES:
+        bloom = build_bloom(seen, "url_hash", params)
+
+        def probe(df):
+            return bloom_negative_filter(df, "url_hash", bloom)
+    else:
+        cparams = sized_params(cop.CuckooParams, n_seen, parallelism)
+        shards = cop.build_cuckoo_shards(seen, "url_hash", cparams).localCheckpoint()
+
+        def probe(df):
+            return cop.cuckoo_negative_filter_sharded(df, "url_hash", shards, cparams)
+    return lambda df: probe(df).localCheckpoint()
+
+
 def run_crawl(
     spark: SparkSession,
     records: DataFrame,
@@ -352,14 +376,14 @@ def run_crawl(
     boosts priority (see ``CrawlConfig.sitemap_weight``).  Resume stays
     bit-exact — the augmented frontier is already inside the epoch-0
     snapshot, and the affinity dim is rebuilt deterministically."""
-    if cfg.seen_filter not in ("bloom", "cuckoo", None):
-        raise ValueError(f"seen_filter must be bloom|cuckoo|None, got {cfg.seen_filter!r}")
     store = CheckpointStore(cfg.checkpoint_dir) if cfg.checkpoint_dir else None
 
-    # canonicalize the link graph once (one UDF pass over edges)
+    # canonicalize the link graph once per call: pinned, so each epoch's
+    # outlink join reads it instead of re-running the UDF under the join's
+    # inferred isnotnull filter and again for the projection
     edges = fop.canonicalize_frontier(
         link_graph.select(F.col("src_url").alias("url"), "dst_url"), "url"
-    ).select(F.col("url_norm").alias("src_norm"), "dst_url")
+    ).select(F.col("url_norm").alias("src_norm"), "dst_url").localCheckpoint()
 
     # optional link-structure priority: PageRank over the HOST graph, once,
     # normalized to [0, weight] and broadcast into every epoch's priority
@@ -439,43 +463,13 @@ def run_crawl(
     logs = []
     metrics = []
     for epoch in range(start_epoch, cfg.epochs):
-        # the membership set's size sizes this epoch's filter.  Counting the
-        # merged parquet deltas (or the in-memory checkpoint) reads no
-        # column; a recrawl window reads first_epoch, and the adaptive
-        # schedule's anti-join runs once more for it.
-        bloom_probe = None
-        n_seen = seen.count() if cfg.seen_filter else 0
-        if cfg.seen_filter and not n_seen:
-            # nothing seen yet: every candidate is definitely new — the
-            # constant folds the split to no join and no Python stage
-            def bloom_probe(df):
-                return df.withColumn("maybe_seen", F.lit(False))
-        elif cfg.seen_filter == "cuckoo":
-            # cuckoo tier: same prefilter contract (negative ⇒ definitely
-            # new), deletion-capable and ~17% smaller at FPR 1e-6.  Rebuilt
-            # per epoch from the membership set like the Bloom, so recrawl
-            # expiry needs no in-place deletion here; remove_hashes serves
-            # long-lived filters maintained across epochs.
-            cparams = sized_params(cop.CuckooParams, n_seen, parallelism)
-            cshards = cop.build_cuckoo_shards(seen, "url_hash", cparams).localCheckpoint()
-
-            def bloom_probe(df, _shards=cshards, _p=cparams):
-                return cop.cuckoo_negative_filter_sharded(df, "url_hash", _shards, _p)
-        elif cfg.seen_filter:
-            params = sized_params(BloomParams, n_seen, parallelism)
-            if params.shard_bytes * params.num_shards > _BLOOM_BROADCAST_MAX_BYTES:
-                shards = build_bloom_shards(seen, "url_hash", params).localCheckpoint()
-
-                def bloom_probe(df, _shards=shards, _p=params):
-                    return bloom_negative_filter_sharded(df, "url_hash", _shards, _p)
-            else:
-                bloom = build_bloom(seen, "url_hash", params)
-
-                def bloom_probe(df, _b=bloom):
-                    return bloom_negative_filter(df, "url_hash", _b)
-
+        # the membership set's size picks and sizes this epoch's filter.
+        # Counting the merged parquet deltas (or the in-memory checkpoint)
+        # reads no column; a recrawl window reads first_epoch, and the
+        # adaptive schedule's anti-join runs once more for it.
+        seen_probe = _seen_prefilter(seen, seen.count(), parallelism)
         crawl_log = _epoch_plan(
-            spark, frontier_df, seen, robots_rules, records, cfg, bloom_probe,
+            spark, frontier_df, seen, robots_rules, records, cfg, seen_probe,
             host_rank=host_rank, sitemap_rank=sitemap_rank,
         )
         # truncate lineage every epoch: without this the logical plan embeds
